@@ -23,9 +23,13 @@ compute identical results distributed, with ONE shuffle total:
 costs a SECOND full exchange — Catalyst cannot know the data is already
 partitioned by the id expression — which these formulations avoid.)
 
-Used by the crawl engine's parent_rank (plans/crawl.py), the O3
+Used by the crawl engine's distributed ``seeds_df`` seeding
+(plans/crawl.py), curriculum ordering (operators/curriculum.py), the O3
 admission-rank oracle query (reference admission rank,
-src/WebCrawler.js:553-560), and sequence packing (operators/packing.py).
+src/WebCrawler.js:553-560), and sequence packing / sharding
+(operators/packing.py, operators/shards.py). The crawl's per-batch
+``parent_rank`` does NOT use them: a batch is a bounded top-k whose merge
+task already holds it sorted, so a plain window there costs nothing.
 """
 
 from __future__ import annotations
@@ -67,7 +71,7 @@ def _bases(pairs: list[tuple[int, int]]) -> dict[int, int]:
 def _ranked_with_local(
     df: DataFrame, order_cols: list[Column], n: int
 ) -> tuple[DataFrame, DataFrame]:
-    """Shared core of the row-number variants: persist the input (the
+    """Core of :func:`distributed_row_number`: persist the input (the
     range partitioner SAMPLES it — without the pin the upstream plan
     would execute twice), range-partition + sort within partitions, and
     decode (__pid, __local) from ``monotonically_increasing_id``.
@@ -199,46 +203,3 @@ def distributed_cumsum(
         ).cast("long"),
     ).drop("__pid", "__run")
     return out, [df, summed]
-
-
-def distributed_row_number_lazy(
-    df: DataFrame,
-    order_cols: list[Column],
-    out_col: str = "rank",
-    num_partitions: int | None = None,
-) -> tuple[DataFrame, list[DataFrame]]:
-    """Same contract and partitioning scheme as
-    :func:`distributed_row_number`, but with ZERO driver actions: the
-    per-partition base offsets are folded in via a broadcast join on a
-    lazily-aggregated counts plan, so the whole rank rides the consuming
-    job instead of paying a collect round-trip per call. The exclusive
-    prefix sum over the (≤ n_partitions)-row counts is a tiny
-    triangular self-join — deliberately NOT a global window, so no
-    single-partition WindowExec ever appears in the plan.
-
-    Use this in per-batch loops (the crawl engine's parent_rank) where
-    an extra job launch per batch is pure latency; keep the collect
-    variant where the caller wants the ranked result materialized
-    anyway. The input is persisted for the same reason as the collect
-    variant (the range partitioner samples its input; both the counts
-    branch and the main branch must see ONE materialization)."""
-    spark = df.sparkSession
-    n = num_partitions or max(
-        2, min(spark.sparkContext.defaultParallelism, 64)
-    )
-    df, ranked = _ranked_with_local(df, order_cols, n)
-    counts = ranked.groupBy("__pid").agg(F.count(F.lit(1)).alias("__n"))
-    a, b = counts.alias("a"), counts.alias("b")
-    bases = (
-        a.join(b, F.col("b.__pid") < F.col("a.__pid"), "left")
-        .groupBy(F.col("a.__pid").alias("__pid"))
-        .agg(F.coalesce(F.sum("b.__n"), F.lit(0)).alias("__base"))
-    )
-    out = (
-        ranked.join(F.broadcast(bases), "__pid")
-        .withColumn(
-            out_col, (F.col("__local") + F.col("__base")).cast("int")
-        )
-        .drop("__pid", "__local", "__base")
-    )
-    return out, [df, ranked]

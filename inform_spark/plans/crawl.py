@@ -11,8 +11,11 @@ Per batch:
 
 1. live frontier  = frontier ∖ seen           (left anti join, J1 flavor)
 2. politeness     = per-host token budget      (ranking window, T2-T4)
-3. batch          = first B by frontier_offset (TakeOrderedAndProject — no
-                                                global sort, O2 limit pushdown)
+3. batch          = first B by (priority, frontier_offset): ONE
+                    TakeOrderedAndProject (no global sort, O2 limit
+                    pushdown); parent_rank is a row_number over its single
+                    sorted merge partition (no Exchange, no Sort), a task
+                    that B <= MAX_BATCH_ROWS bounds
 4. fetch          = broadcast(batch) ⨝ pages   (J3; host-pruned scan; live
                                                 HTTP fetch is the same stage
                                                 as a mapInPandas UDF)
@@ -563,9 +566,7 @@ class CrawlEngine:
         )
 
     # ------------------------------------------------------------------
-    def _select_batch(
-        self, live: DataFrame, b: int, skip_limit: bool = False
-    ) -> DataFrame:
+    def _select_batch(self, live: DataFrame, b: int) -> DataFrame:
         sel = live
         if self.cfg.batch_wall_budget_ms is not None:
             robots_dim = self._robots_dim()
@@ -642,39 +643,29 @@ class CrawlEngine:
                 .filter(F.col("__rank") <= F.col("__budget"))
                 .drop("__budget", "__rank", "crawl_delay_ms", "__pkey")
             )
-        # When the caller proves the limit cannot bind (|live| <= b), the
-        # whole live set IS the batch: skip the top-k entirely. A global
-        # `orderBy().limit(b)` is TakeOrderedAndProject — top-b per
-        # partition, then ONE merge task all b rows funnel through. For a
-        # production batch of millions that single task is the wall; an
-        # unbounded crawl (limit >> frontier) should never pay it.
-        # Ordering is irrelevant here: parent_rank re-derives the exact
-        # (priority, offset) order distributed, downstream.
-        if skip_limit:
-            return sel
-        # priority-then-FIFO prefix — TakeOrderedAndProject, no global sort
+        # priority-then-FIFO prefix — TakeOrderedAndProject: top-b per
+        # partition, then ONE merge task; no global sort
         return sel.orderBy("priority", "frontier_offset").limit(b)
 
     # ------------------------------------------------------------------
-    def _with_parent_rank(self, sel: DataFrame) -> tuple[DataFrame, list]:
+    @staticmethod
+    def _with_parent_rank(batch: DataFrame) -> DataFrame:
         """Exact contiguous 1-based attempt rank by (priority,
-        frontier_offset), computed DISTRIBUTED (the no-partition window it
-        replaces serialized the whole batch through one task — fine at
-        1k rows, a wall at a production batch of millions):
+        frontier_offset), computed in the batch's top-k merge task.
 
-        1. range-repartition the batch on the order key — partition i's
-           keys all precede partition i+1's (ordered partitions),
-        2. row_number per partition (each task ranks only its slice),
-        3. add the cumulative row count of earlier partitions — folded in
-           via a broadcast join on the lazily-aggregated per-partition
-           counts (<= n_partitions rows), so the rank rides the batch's
-           fetch+render job with ZERO extra driver actions per batch.
-
-        Returns (ranked_df, [cached_dfs_to_unpersist_after_the_batch])."""
-        from inform_spark.operators.rank import distributed_row_number_lazy
-
-        key = [F.col("priority").asc(), F.col("frontier_offset").asc()]
-        return distributed_row_number_lazy(sel, key, out_col="parent_rank")
+        ``batch`` is :meth:`_select_batch`'s ``orderBy(...).limit(b)``,
+        whose TakeOrderedAndProject output is already ONE partition sorted
+        on this key — so the unpartitioned window adds no Exchange and no
+        Sort: it numbers the rows the merge task already holds. That task
+        sees at most ``b <= MAX_BATCH_ROWS`` rows, the same bound that
+        keeps parent_rank inside its 21 frontier_offset bits, so a batch
+        never funnels more than 2^21 rows through it."""
+        return batch.withColumn(
+            "parent_rank",
+            F.row_number().over(
+                Window.orderBy("priority", "frontier_offset")
+            ),
+        )
 
     # ------------------------------------------------------------------
     def _fetch(self, batch: DataFrame) -> DataFrame:
@@ -1024,7 +1015,7 @@ class CrawlEngine:
                 return run
 
             while self.attempted < cfg.limit:
-                t_ph = time.monotonic()
+                t_ph = t_batch = time.monotonic()
                 if max_batches is not None and batches_run >= max_batches:
                     break
                 frontier_t = self.catalog.tables["frontier"]
@@ -1069,15 +1060,9 @@ class CrawlEngine:
                     # frontier exhausted: don't plan+run a whole empty batch
                     # (fetch UDF spin-up, empty appends) just to learn n=0
                     break
-                # parent_rank = attempt order within the batch, ranked
-                # distributed (range partitions + per-partition offsets).
-                # skip_limit: the top-k funnel is pure overhead when the whole
-                # live set fits in the batch (the common case for unbounded /
-                # large-limit crawls).
-                batch, batch_caches = self._with_parent_rank(
-                    self._select_batch(live, b, skip_limit=live_count <= b)
-                )
-                run_caches.extend(batch_caches)
+                # parent_rank = attempt order within the batch, numbered in
+                # the top-k merge task that selects it
+                batch = self._with_parent_rank(self._select_batch(live, b))
 
                 fetched = self._fetch(batch)
                 # Render placement: fixture mode rides the (balanced) pages-scan
@@ -1166,8 +1151,6 @@ class CrawlEngine:
                 n_batch = attempts_t.last_dir_row_count()
                 t_ph = _mark("fetch_render", t_ph)
                 if n_batch == 0:
-                    for df in batch_caches:
-                        df.unpersist()
                     break
                 agg = obs.get
                 delta = self.spark.read.schema(schemas.ATTEMPTS).parquet(
@@ -1243,8 +1226,9 @@ class CrawlEngine:
                 # propagation can elide CollectMetrics nodes when the candidate
                 # set is empty, wedging Observation.get. Counts come from the
                 # written delta's parquet footers (driver-side metadata, no job).
-                # discovered_in_batch already rides the candidate rows (from
-                # the consts join in _discover) — no batch-varying literal here
+                # discovered_in_batch already rides the candidate rows (column
+                # arithmetic on attempted_in_batch in _discover) — no
+                # batch-varying literal here
                 frontier_cols = [
                     "url",
                     "host",
@@ -1308,7 +1292,6 @@ class CrawlEngine:
                     t_ph = _mark("writes_discover", t_ph)
 
                 n_disc = agg["n_disc"]
-                wall_ms = int((time.monotonic() - t0) * 1000)
                 lineage_row = (
                     self.batch_id,
                     agg["lo"] or 0,
@@ -1321,9 +1304,8 @@ class CrawlEngine:
                     int(n_disc),
                     n_admit,
                     n_cand - n_admit,
-                    wall_ms,
+                    int((time.monotonic() - t_batch) * 1000),
                 )
-                t_ph = _mark("frontier_append", t_ph)
                 # lineage is ONE row: driver-side pyarrow append (no Spark job).
                 # The bloom fold-in of newly admitted urls is PIPELINED into the
                 # next batch — it is only needed by the next discover, which
@@ -1377,8 +1359,6 @@ class CrawlEngine:
                 summary.links_dropped_cap += n_cand - n_admit
                 summary.links_dropped_template += n_tpl_dropped
 
-                for df in batch_caches:
-                    df.unpersist()
                 # this batch's caches are all released — drop their refs so
                 # a million-batch crawl does not accumulate plan objects;
                 # only the long-lived robots dim still needs finally-cover

@@ -47,6 +47,8 @@ def test_priority_front_runs_fifo(spark, site, tmp_path):
 
     # same final URL-seen SET: priority permutes pop order, never coverage
     assert set(fifo) == set(prio)
+    # crawl ranks stay contiguous 1..n when priority reorders each batch
+    assert sorted(prio.values()) == list(range(1, len(prio) + 1))
 
     # the comparable cohort: section item pages all enter the frontier in
     # the same discovery round (when their section page is fetched), so
@@ -86,26 +88,3 @@ def test_priority_resume_keeps_queue_discipline(spark, site, tmp_path):
     oi = [ranks[u] for u in ranks if "/docs/item-" in u or "/blog/item-" in u]
     if gi and oi:
         assert max(gi) < min(oi)
-
-
-def test_distributed_row_number_lazy_equals_collect(spark):
-    from pyspark.sql import functions as F
-
-    from inform_spark.operators.rank import (
-        distributed_row_number,
-        distributed_row_number_lazy,
-    )
-
-    df = spark.range(0, 5000).select(
-        (F.col("id") % 7).cast("int").alias("priority"),
-        (F.col("id") * 37 % 5000).alias("frontier_offset"),
-    ).distinct()
-    key = [F.col("priority").asc(), F.col("frontier_offset").asc()]
-    a, ca = distributed_row_number(df, key, out_col="rk")
-    b, cb = distributed_row_number_lazy(df, key, out_col="rk")
-    ra = {(r["priority"], r["frontier_offset"]): r["rk"] for r in a.collect()}
-    rb = {(r["priority"], r["frontier_offset"]): r["rk"] for r in b.collect()}
-    assert ra == rb
-    assert sorted(rb.values()) == list(range(1, len(rb) + 1))
-    for d in ca + cb:
-        d.unpersist()
