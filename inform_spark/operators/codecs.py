@@ -514,6 +514,8 @@ def decode_jpeg(b: bytes) -> np.ndarray:
             prec, h, w, nc = struct.unpack(">BHHB", seg[:6])
             if prec != 8:
                 raise ValueError(f"unsupported precision {prec}")
+            if not 1 <= nc <= 4:
+                raise ValueError(f"bad JPEG component count {nc}")
             progressive = marker == 0xC2
             comps = []
             for ci in range(nc):
@@ -521,6 +523,10 @@ def decode_jpeg(b: bytes) -> np.ndarray:
                 comps.append(
                     {"id": cid, "h": hv >> 4, "v": hv & 15, "tq": tq}
                 )
+                if not (1 <= hv >> 4 <= 4 and 1 <= hv & 15 <= 4):
+                    # T.81 B.2.2: sampling factors are 1..4; a 0 would
+                    # divide by zero sizing the MCU grid below
+                    raise ValueError(f"bad JPEG sampling factors 0x{hv:02X}")
             frame = {"h": h, "w": w, "comps": comps}
             if h * w > (1 << 26):
                 # ~67 MP cap: a corrupt SOF claiming 65535x65535 would
@@ -727,10 +733,12 @@ def is_gif(b: bytes) -> bool:
     return len(b) > 13 and b[:6] in (b"GIF87a", b"GIF89a")
 
 
-def _lzw_decode(min_code_size: int, data: bytes) -> list[int]:
+def _lzw_decode(min_code_size: int, data: bytes, n_pixels: int) -> list[int]:
     """GIF-variant LZW: LSB-first variable-width codes (up to 12 bits),
     clear/end codes, dictionary of index strings (GIF89a spec
-    Appendix F). Returns the flat pixel-index list."""
+    Appendix F). Returns the flat pixel-index list, at most
+    ``n_pixels`` long: decoding stops once the frame is full, so a
+    crafted stream cannot expand past the image it claims to be."""
     if not 1 <= min_code_size <= 11:
         # spec range is 2-8 (11 max with the 12-bit code ceiling); a
         # corrupt value like 102 would otherwise allocate a 2^102-entry
@@ -769,7 +777,12 @@ def _lzw_decode(min_code_size: int, data: bytes) -> list[int]:
         else:
             raise ValueError(f"bad LZW code {code}")
         out.extend(entry)
-        if prev is not None:
+        if len(out) >= n_pixels:
+            del out[n_pixels:]
+            return out
+        # a full 4096-entry table stops growing until the next CLEAR
+        # (the 12-bit code ceiling; the GIF "deferred clear")
+        if prev is not None and len(dictionary) < 4096:
             dictionary.append(prev + [entry[0]])
             if len(dictionary) == (1 << width) and width < 12:
                 width += 1
@@ -827,7 +840,7 @@ def decode_gif(b: bytes) -> np.ndarray:
             data += b[pos + 1 : pos + 1 + ln]
             pos += 1 + ln
         pos += 1
-        idx = _lzw_decode(min_code, bytes(data))
+        idx = _lzw_decode(min_code, bytes(data), iw * ih)
         if len(idx) < iw * ih:
             raise ValueError("short GIF pixel data")
         grid = np.array(idx[: iw * ih], dtype=np.int64).reshape(ih, iw)

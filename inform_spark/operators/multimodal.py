@@ -5,16 +5,16 @@ media_ref in our span model — reference src/WebCrawler.js rendering path);
 a 100 TB training-data pipeline additionally needs the *bytes*. This module
 defines the Spark-side plumbing — schema, partitioning, Arrow batch shape,
 ``mapInPandas`` UDF signatures — as real, tested code. The decode path is
-REAL for PNG, BMP, GIF, baseline JPEG, and WAV-PCM via the pure-stdlib
-codecs in ``operators/codecs.py`` (spec-exact struct/zlib/Huffman parsing
-— no PIL needed), and MP4 container METADATA parses for real
-(``video_metadata`` over ``codecs.parse_mp4``); only the formats that
-genuinely require a codec library (WebP, progressive JPEG, video FRAME
-decode — PIL/ffmpeg are not in this container and no package index is
-reachable) stay behind ``decode_image_stub`` / ``sample_frames_stub``,
-deterministic fakes so every downstream shape is still exercised
-end-to-end. Swapping PIL/ffmpeg in changes ONE function each
-(`decode_image` / frame sampling), not the pipeline.
+REAL for PNG, BMP, GIF, baseline and progressive JPEG, lossless WebP
+(VP8L) and WAV-PCM via the pure-stdlib codecs in ``operators/codecs.py``
+and ``operators/vp8l.py`` (spec-exact struct/zlib/Huffman parsing — no
+PIL needed), and MP4 container METADATA parses for real
+(``video_metadata`` over ``codecs.parse_mp4``); only the profiles that
+genuinely require a codec library (lossy-VP8 WebP, arithmetic-coded
+JPEG, video FRAME decode) stay behind ``decode_image_stub`` /
+``sample_frames_stub``, deterministic fakes so every downstream shape is
+still exercised end-to-end. Swapping PIL/ffmpeg in changes ONE function
+each (`decode_image` / frame sampling), not the pipeline.
 
 Design for scale:
 - media rows are fat (binary column): process with ``mapInPandas`` so one

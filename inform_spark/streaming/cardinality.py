@@ -8,14 +8,13 @@ count-distinct needs all history; the HLL register table doesn't —
 registers are a max-semilattice, so per-batch registers simply
 accumulate and the merged view is a groupBy MAX.
 
-Design (simpler than streaming/dedup on purpose — the state is
-mergeable, so no read-modify-append cycle exists at all):
-- per micro-batch, ``foreachBatch`` computes the BATCH's own registers
+Design (the state is mergeable, so no read-modify-append cycle exists
+at all):
+- per micro-batch, the loop computes the BATCH's own registers
   (``hll_registers`` — one narrow pass + one map-side-combine groupBy)
-  and overwrites ONLY its own ``batch_id`` partition of the register
-  table — idempotent under foreachBatch replay by construction, with
-  no cross-batch read in the write path (no contention, no replay
-  anti-join gymnastics);
+  and writes them as its own ``batch_id`` partition through the shared
+  replay-idempotent kernel (``streaming.microbatch``), with no
+  cross-batch read in the write path;
 - the READ path merges all partitions with MAX(register) and feeds
   ``hll_estimate`` — estimates after batch k are byte-identical to a
   single batch build over batches 0..k (the semilattice law
@@ -43,61 +42,33 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from inform_spark.streaming import microbatch as mb
+
 REGS_SCHEMA = "key string, bucket int, register int, p int, batch_id long"
 
 
-def process_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    regs_dir: str,
-    item_col: str = "item",
-    key_col: str = "key",
-    p: int = 6,
-    salt: str = "hll",
-) -> None:
-    """One micro-batch: write this batch's registers under its own
+@mb.micro_batch
+def process_batch(batch_df: DataFrame, batch_id: int, regs_dir: str,
+                  item_col: str = "item", key_col: str = "key", p: int = 6,
+                  salt: str = "hll") -> None:
+    """One micro-batch: write this batch's registers as its own
     batch_id partition. Module-level so replay idempotence is directly
-    testable (re-invoking with the same (batch_df, batch_id) after a
-    crash overwrites the identical partition with identical rows)."""
+    testable."""
     from inform_spark.operators.sketches import hll_registers
 
-    if batch_df.isEmpty():
-        return  # a zero-row first batch must not leave a schema-less dir
-    regs = (
-        hll_registers(
-            batch_df.select(F.col(key_col).alias("key"), F.col(item_col)),
-            item_col,
-            ["key"],
-            p=p,
-            salt=salt,
-        )
-        .withColumn("p", F.lit(p).cast("int"))
-        .withColumn("batch_id", F.lit(batch_id).cast("long"))
-    )
-    regs.write.mode("overwrite").partitionBy("batch_id").option(
-        "partitionOverwriteMode", "dynamic"
-    ).parquet(regs_dir)
+    keyed = batch_df.select(F.col(key_col).alias("key"), F.col(item_col))
+    regs = hll_registers(keyed, item_col, ["key"], p=p, salt=salt)
+    mb.write(regs.withColumn("p", F.lit(p).cast("int")), regs_dir, batch_id)
 
 
-def _read_regs(spark: SparkSession, regs_dir: str) -> DataFrame:
-    """The raw register table; ZERO rows if no batch has created it
-    yet (a monitor may poll estimates before the first data lands)."""
-    try:
-        return spark.read.schema(REGS_SCHEMA).parquet(regs_dir)
-    except Exception as exc:  # AnalysisException: PATH_NOT_FOUND
-        if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
-            return spark.createDataFrame([], REGS_SCHEMA)
-        raise
-
-
-def table_p(spark: SparkSession, regs_dir: str, expected: int | None = None) -> int | None:
+def table_p(spark: SparkSession, regs_dir: str,
+            expected: int | None = None) -> int | None:
     """The single precision the table was built at (None if the table
     is empty). Raises on a mixed-p table — registers at different p
     occupy different bucket spaces and must never be max-merged — and
     on a caller expectation that contradicts the stored value."""
-    ps = sorted(
-        r["p"] for r in _read_regs(spark, regs_dir).select("p").distinct().collect()
-    )
+    regs = mb.read(spark, regs_dir, REGS_SCHEMA)
+    ps = sorted(r["p"] for r in regs.select("p").distinct().collect())
     if len(ps) > 1:
         raise ValueError(f"register table {regs_dir} mixes precisions {ps}")
     stored = ps[0] if ps else None
@@ -113,15 +84,13 @@ def merged_registers(spark: SparkSession, regs_dir: str) -> DataFrame:
     """(key, bucket, register) — the MAX-merge of every batch's
     registers; identical to a whole-history single build."""
     return (
-        _read_regs(spark, regs_dir)
+        mb.read(spark, regs_dir, REGS_SCHEMA)
         .groupBy("key", "bucket")
         .agg(F.max("register").alias("register"))
     )
 
 
-def estimates(
-    spark: SparkSession, regs_dir: str, p: int | None = None
-) -> DataFrame:
+def estimates(spark: SparkSession, regs_dir: str, p: int | None = None) -> DataFrame:
     """(key, n_zero_registers, sum_scaled, est_milli) over everything
     ingested so far; p is read from the table (pass it only to assert
     an expectation). Zero rows before the first batch lands."""
@@ -140,32 +109,14 @@ def compact(spark: SparkSession, regs_dir: str, out_dir: str) -> None:
     ``out_dir`` for ``regs_dir`` is the caller's catalog-level rename
     (at scale: an Iceberg rewrite_data_files commit), never a
     driver-side copy."""
-    stored = table_p(spark, regs_dir)
-    merged_registers(spark, regs_dir).withColumn(
-        "p", F.lit(stored).cast("int")
-    ).withColumn("batch_id", F.lit(-1).cast("long")).write.mode(
-        "overwrite"
-    ).partitionBy("batch_id").parquet(out_dir)
+    p = F.lit(table_p(spark, regs_dir)).cast("int")
+    mb.seed(merged_registers(spark, regs_dir).withColumn("p", p), out_dir)
 
 
-def cardinality_stream(
-    stream: DataFrame,
-    regs_dir: str,
-    checkpoint_dir: str,
-    item_col: str = "item",
-    key_col: str = "key",
-    p: int = 6,
-    salt: str = "hll",
-    available_now: bool = True,
-):
+def cardinality_stream(stream: DataFrame, regs_dir: str, checkpoint_dir: str,
+                       item_col: str = "item", key_col: str = "key", p: int = 6,
+                       salt: str = "hll"):
     """Run the tracking loop on a streaming (key, item) DataFrame.
     Returns the StreamingQuery (caller awaits termination)."""
-    writer = stream.writeStream.foreachBatch(
-        lambda df, bid: process_batch(
-            df, bid, regs_dir, item_col=item_col, key_col=key_col, p=p,
-            salt=salt,
-        )
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return mb.start(stream, checkpoint_dir, lambda df, bid: process_batch(
+        df, bid, regs_dir, item_col=item_col, key_col=key_col, p=p, salt=salt))

@@ -4,176 +4,118 @@
 A content-addressed store (the LBFS/restic/borg shape, and the delta
 layer a recrawl pipeline puts in front of raw storage) never rebuilds:
 documents ARRIVE, each is CDC-chunked, chunks whose hash the index has
-already seen cost nothing, new chunks are stored and appended to the
-index. This module runs that ingest as a Structured Streaming query
-(``readStream`` → ``foreachBatch``) over a persisted chunk-hash index,
-mirroring ``streaming/dedup.py``'s append-only-index discipline:
+already seen cost nothing, and new chunks are stored and appended to the
+persisted chunk-hash index.
 
 - **ownership is deterministic**: within a micro-batch, a chunk hash is
   stored by its min-doc_id occurrence; a doc's repeated own chunk
-  stores once and dups the rest; across batches, first arrival wins —
-  results are independent of partitioning, and with one batch over an
-  empty index the per-doc stored/dup split equals the sequential
-  reference (asserted in tests);
-- **replay-safe**: the verdict sink overwrites only its own batch_id
-  partition; the probe excludes index rows OWNED by this batch's docs
-  (a crash between the index append and the checkpoint commit replays
-  the batch against an index already containing its own chunks); the
-  index append is anti-joined on chunk hash, so nothing lands twice.
-  That owner-exclusion makes doc_id uniqueness a hard contract of the
-  stream (the same contract streaming/dedup.py carries): a doc_id must
-  arrive at most once over the stream's lifetime — replay of the SAME
-  arrival is what the exclusion protects. A recrawl of the same page
-  must mint a fresh doc_id (e.g. hash of (url, fetch_ts), the
-  engine's snapshot convention); re-using the old id would make the
-  probe treat the re-arrival as its own crashed replay and mis-report
-  its chunks as stored;
-- **state is the index table, not the state store**: no watermark, no
-  driver memory growth; at scale the index is an Iceberg table bucketed
-  by chunk hash so each micro-batch probe is a co-located join.
+  stores once and dups the rest; across batches, first arrival wins.
+  With one batch over an empty index the per-doc stored/dup split
+  equals the sequential reference (asserted in tests);
+- **replay-safe** through the shared kernel (``streaming.microbatch``):
+  a replay appends nothing twice, and a doc that comes back later stores
+  only the chunks the index lacks;
+- **state is the index table**: no state store, no watermark; at scale
+  an Iceberg table bucketed by chunk hash, so each probe is co-located.
 
 Per-doc verdicts: ``(doc_id, n_chunks, stored_chunks, stored_tokens,
-dup_chunks, dup_tokens, batch_id)`` — stored_tokens is what the batch
-actually costs the store; dup_tokens is what chunk-level dedup saved.
-Note the accounting difference from batch ``cdc_chunks``: the batch
-operator measures REDUNDANCY (both copies of a duplicated chunk count
-as dup), the ingest measures STORE COST (the first copy is stored, only
-later copies are dup).
+dup_chunks, dup_tokens, batch_id)``. Unlike batch ``cdc_chunks``, which
+measures REDUNDANCY (both copies of a duplicated chunk count as dup),
+the ingest measures STORE COST (the first copy is stored, only later
+copies are dup).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-INDEX_SCHEMA = "h long, owner long"
+from inform_spark.streaming import microbatch as mb
+
+INDEX_SCHEMA = "h long, owner long, batch_id long"
 VERDICTS_SCHEMA = (
     "doc_id long, n_chunks long, stored_chunks long, stored_tokens long, "
     "dup_chunks long, dup_tokens long, batch_id long"
 )
 
 
-def init_chunk_index(
-    spark: SparkSession,
-    index_dir: str,
-    docs: DataFrame | None = None,
-    w: int = 4,
-    divisor: int = 8,
-) -> None:
+def _chunks(docs: DataFrame, w: int, divisor: int) -> DataFrame:
+    from inform_spark.operators.chunking import chunk_structs
+
+    return docs.select(
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.explode(chunk_structs("text", w, divisor)).alias("c"),
+    )
+
+
+def init_chunk_index(spark: SparkSession, index_dir: str,
+                     docs: DataFrame | None = None, w: int = 4,
+                     divisor: int = 8) -> None:
     """Create the persisted chunk-hash index, optionally seeded from an
     existing corpus (owner = min doc_id per chunk hash)."""
-    from inform_spark.operators.chunking import chunk_structs
-
-    if docs is not None:
-        seed = (
-            docs.select(
-                F.col("doc_id").cast("long").alias("doc_id"),
-                F.explode(chunk_structs("text", w, divisor)).alias("c"),
-            )
-            .groupBy(F.col("c.h").alias("h"))
-            .agg(F.min("doc_id").alias("owner"))
-        )
-    else:
-        seed = spark.createDataFrame([], INDEX_SCHEMA)
-    seed.write.mode("overwrite").parquet(index_dir)
+    mb.seed(
+        _chunks(docs, w, divisor).groupBy(F.col("c.h").alias("h"))
+        .agg(F.min("doc_id").alias("owner"))
+        if docs is not None
+        else spark.createDataFrame([], INDEX_SCHEMA),
+        index_dir,
+    )
 
 
-def process_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    index_dir: str,
-    verdicts_dir: str,
-    w: int = 4,
-    divisor: int = 8,
-) -> None:
+@mb.micro_batch
+def process_batch(batch_df: DataFrame, batch_id: int, index_dir: str,
+                  verdicts_dir: str, w: int = 4, divisor: int = 8) -> None:
     """One ingest micro-batch — module-level so replay idempotence is
     directly testable."""
-    from inform_spark.operators.chunking import chunk_structs
-
-    if batch_df.isEmpty():
-        return
-    spark = batch_df.sparkSession
-    index = spark.read.schema(INDEX_SCHEMA).parquet(index_dir)
-    batch_ids = batch_df.select(
-        F.col("doc_id").cast("long").alias("owner")
-    ).distinct()
-    # replay safety: ignore index rows this very batch appended
-    index_prior = index.join(batch_ids, "owner", "left_anti")
-
+    index = mb.prior(batch_df.sparkSession, index_dir, INDEX_SCHEMA, batch_id)
     # (doc_id, h, cnt, tk): per-doc chunk-hash multiplicity; tk is
     # constant per h (same content => same token count)
     ch = (
-        batch_df.select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.explode(chunk_structs("text", w, divisor)).alias("c"),
-        )
+        _chunks(batch_df, w, divisor)
         .groupBy("doc_id", F.col("c.h").alias("h"))
         .agg(F.count(F.lit(1)).alias("cnt"), F.min("c.tk").alias("tk"))
         .persist()
     )
     batch_owner = ch.groupBy("h").agg(F.min("doc_id").alias("__bowner"))
-    probed = (
-        ch.join(
-            index_prior.select("h", F.col("owner").alias("__iowner")),
-            "h",
-            "left",
-        )
-        .join(batch_owner, "h")
-        .withColumn(
-            "__stored",
-            F.when(F.col("__iowner").isNotNull(), F.lit(0))
-            .when(F.col("__bowner") < F.col("doc_id"), F.lit(0))
-            .otherwise(F.lit(1)),
-        )
+    stored = (
+        F.when(F.col("__iowner").isNotNull(), F.lit(0))
+        .when(F.col("__bowner") < F.col("doc_id"), F.lit(0))
+        .otherwise(F.lit(1))
     )
-    verdicts = probed.groupBy("doc_id").agg(
-        F.sum("cnt").cast("long").alias("n_chunks"),
-        F.sum("__stored").cast("long").alias("stored_chunks"),
-        F.sum(F.col("__stored") * F.col("tk")).cast("long").alias("stored_tokens"),
-        F.sum(F.col("cnt") - F.col("__stored")).cast("long").alias("dup_chunks"),
-        F.sum((F.col("cnt") - F.col("__stored")) * F.col("tk"))
-        .cast("long")
-        .alias("dup_tokens"),
-    ).withColumn("batch_id", F.lit(batch_id))
-    verdicts.write.mode("overwrite").partitionBy("batch_id").option(
-        "partitionOverwriteMode", "dynamic"
-    ).parquet(verdicts_dir)
-
+    probed = (
+        ch.join(index.select("h", F.col("owner").alias("__iowner")), "h", "left")
+        .join(batch_owner, "h")
+        .withColumn("__stored", stored)
+        .withColumn("__dup", F.col("cnt") - F.col("__stored"))
+    )
+    verdicts = probed.groupBy("doc_id").agg(*[
+        F.sum(c).cast("long").alias(name) for name, c in (
+            ("n_chunks", F.col("cnt")),
+            ("stored_chunks", F.col("__stored")),
+            ("stored_tokens", F.col("__stored") * F.col("tk")),
+            ("dup_chunks", F.col("__dup")),
+            ("dup_tokens", F.col("__dup") * F.col("tk")),
+        )
+    ])
+    mb.write(verdicts, verdicts_dir, batch_id)
+    # the batch's own first occurrences that the prior index lacks
     new_chunks = (
         ch.join(batch_owner, "h")
         .filter(F.col("doc_id") == F.col("__bowner"))
         .select("h", F.col("doc_id").alias("owner"))
         .distinct()
-        # idempotent append: replay finds its own rows already present
         .join(index, "h", "left_anti")
     )
-    new_chunks.write.mode("append").parquet(index_dir)
+    mb.write(new_chunks, index_dir, batch_id)
     ch.unpersist()
 
 
-def chunk_ingest_stream(
-    stream: DataFrame,
-    index_dir: str,
-    verdicts_dir: str,
-    checkpoint_dir: str,
-    w: int = 4,
-    divisor: int = 8,
-    available_now: bool = True,
-):
+def chunk_ingest_stream(stream: DataFrame, index_dir: str, verdicts_dir: str,
+                        checkpoint_dir: str, w: int = 4, divisor: int = 8):
     """Wire the ingest loop as a streaming query over (doc_id, text)."""
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        process_batch(batch_df, batch_id, index_dir, verdicts_dir, w, divisor)
-
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return mb.start(stream, checkpoint_dir, lambda df, bid: process_batch(
+        df, bid, index_dir, verdicts_dir, w, divisor))
 
 
 def read_chunk_verdicts(spark: SparkSession, verdicts_dir: str) -> DataFrame:
-    return spark.read.schema(VERDICTS_SCHEMA).parquet(verdicts_dir)
+    return mb.read(spark, verdicts_dir, VERDICTS_SCHEMA)

@@ -3,35 +3,26 @@
 
 A production pipeline curates as data ARRIVES: each micro-batch of crawl
 output is gated against FROZEN reference statistics and deduplicated
-against the accreting exact-hash index, then appended to the corpus.
-Two deliberate semantic choices:
+against the accreting exact-hash index. Two deliberate semantic choices:
 
-- **Frozen stats.** The batch composition derives the LM band from the
-  corpus's own unigram statistics; a stream cannot (per-batch stats
-  would make every verdict depend on how the stream was chopped and on
-  arrival order). Instead :func:`build_reference_stats` trains the
-  unigram table ONCE (offline, on a reference corpus) and every batch
-  scores against it — the CCNet production shape (Wenzek et al. 2020
-  train the LM on Wikipedia, not on the batch). Model weights and the
-  blocklist are frozen by construction. OOV tokens cost the bits of a
-  count-1 token (the model's most surprising event).
+- **Frozen stats.** A stream cannot derive the LM band from its own
+  unigram statistics (verdicts would depend on how the stream was
+  chopped). :func:`build_reference_stats` trains the unigram table ONCE
+  on a reference corpus and every batch scores against it — the CCNet
+  production shape (Wenzek et al. 2020 train the LM on Wikipedia, not on
+  the batch). OOV tokens cost the bits of a count-1 token. Model weights
+  and the blocklist are frozen by construction.
 - **First arrival wins.** The canonical pick probes the persisted
-  (text_hash, doc_id) index of everything already accepted — the same
-  contract as the crawl engine's seen-set and ``streaming.dedup``; with
-  ``availableNow`` and a single batch the verdicts match the batch
+  (text_hash, doc_id) index of everything already accepted, like the
+  crawl engine's seen-set; a single batch matches the batch
   composition's canonical column exactly.
 
-Exactly-once mirrors ``streaming.dedup``: verdicts overwrite only their
-own batch_id partition (dynamic partition overwrite), the probe excludes
-the batch's own doc_ids (a replayed batch must not see its own prior
-index append), and the index append is anti-joined against existing rows
-— so a foreachBatch replay after a crash reproduces identical verdicts
-and appends nothing twice.
+Replay safety is the shared kernel's (``streaming.microbatch``): a
+replay reproduces identical verdicts and appends nothing twice.
 
-Scale: per-batch work is the batch's own gates (narrow / broadcast) plus
-ONE probe join against the index on text_hash (bucketed by text_hash at
-scale); the vocab table is tiny next to the corpus and broadcastable.
-No state store, no watermark, no unbounded driver memory.
+Scale: per batch, the batch's own gates (narrow / broadcast vocab) plus
+ONE probe join against the index on text_hash (bucketed at scale). No
+state store, no watermark, no unbounded driver memory.
 """
 
 from __future__ import annotations
@@ -42,10 +33,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from inform_spark.operators.textops import _h60, floor_log2, words_col
+from inform_spark.streaming import microbatch as mb
 
 VOCAB_SCHEMA = "token string, bits long"
 META_SCHEMA = "oov_bits long, n_tokens long"
-INDEX_SCHEMA = "text_hash long, doc_id long"
+INDEX_SCHEMA = "text_hash long, doc_id long, batch_id long"
 VERDICTS_SCHEMA = (
     "doc_id long, pass_model int, pass_badword int, pass_lm int, "
     "dup_verdict string, match_id long, keep_final int, batch_id long"
@@ -83,11 +75,10 @@ def build_reference_stats(
 
 
 def init_index(spark: SparkSession, index_dir: str) -> None:
-    spark.createDataFrame([], INDEX_SCHEMA).write.mode("overwrite").parquet(
-        index_dir
-    )
+    mb.seed(spark.createDataFrame([], INDEX_SCHEMA), index_dir)
 
 
+@mb.micro_batch
 def process_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -99,41 +90,27 @@ def process_batch(
     max_bits_milli: int = 14_000,
 ) -> None:
     """One curation micro-batch: frozen-stats gates + first-arrival
-    canonical pick + idempotent verdict/index writes. Module-level so
-    replay idempotence is directly testable."""
+    canonical pick. Module-level so replay idempotence is directly
+    testable."""
     from inform_spark.operators.quality import badword_filter, model_quality_score
 
-    if batch_df.isEmpty():
-        return  # nothing to verdict; also keeps verdicts_dir schema-full
     spark = batch_df.sparkSession
-    vocab = spark.read.schema(VOCAB_SCHEMA).parquet(
-        os.path.join(stats_dir, "vocab")
-    )
-    oov_bits = int(
-        spark.read.schema(META_SCHEMA)
-        .parquet(os.path.join(stats_dir, "meta"))
-        .collect()[0]["oov_bits"]
-    )
+    vocab = spark.read.schema(VOCAB_SCHEMA).parquet(os.path.join(stats_dir, "vocab"))
+    meta = spark.read.schema(META_SCHEMA).parquet(os.path.join(stats_dir, "meta"))
+    oov_bits = int(meta.collect()[0]["oov_bits"])
 
     # at-least-once sources can repeat a doc inside one micro-batch —
     # possibly with DIFFERENT payloads; without collapsing, the four
     # gate frames inner-join into a row cross product per duplicated
     # id. The survivor must be DETERMINISTIC (min by (text[, source])):
     # dropDuplicates picks by partition order, so a replayed batch
-    # could gate/hash a different payload than the original attempt and
-    # append a second text_hash for the same doc to the index
-    payload = ["text"] + (
-        ["source"] if "source" in batch_df.columns else []
-    )
+    # could gate/hash a different payload than the original attempt
+    payload = ["text"] + (["source"] if "source" in batch_df.columns else [])
     d = (
-        batch_df.select(
-            F.col("doc_id").cast("long").alias("doc_id"), *payload
-        )
+        batch_df.select(F.col("doc_id").cast("long").alias("doc_id"), *payload)
         .groupBy("doc_id")
         .agg(F.min(F.struct(*payload)).alias("__s"))
-        .select(
-            "doc_id", *[F.col(f"__s.{c}").alias(c) for c in payload]
-        )
+        .select("doc_id", *[F.col(f"__s.{c}").alias(c) for c in payload])
         .persist()
     )
 
@@ -157,131 +134,75 @@ def process_batch(
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_tokens"),
             F.sum(F.coalesce("bits", F.lit(oov_bits)))
-            .cast("long")
-            .alias("surprisal_bits"),
+            .cast("long").alias("surprisal_bits"),
         )
     )
     mean_milli = F.expr("1000 * surprisal_bits div n_tokens")
+    in_band = (mean_milli >= min_bits_milli) & (mean_milli <= max_bits_milli)
     lm = d.select("doc_id").join(sc, "doc_id", "left").select(
-        "doc_id",
-        F.coalesce(
-            (mean_milli >= min_bits_milli) & (mean_milli <= max_bits_milli),
-            F.lit(False),
-        ).cast("int").alias("pass_lm"),
+        "doc_id", F.coalesce(in_band, F.lit(False)).cast("int").alias("pass_lm")
     )
 
-    # first-arrival canonical: probe the PRIOR index (replay safety:
-    # exclude this batch's own doc_ids), then in-batch min per hash
+    # first-arrival canonical: probe the prior index, then in-batch min
+    # per hash
     hashed = d.select("doc_id", _h60(F.col("text")).alias("text_hash"))
-    index = spark.read.schema(INDEX_SCHEMA).parquet(index_dir)
-    index_prior = index.join(
-        d.select("doc_id").distinct(), "doc_id", "left_anti"
+    index = mb.prior(spark, index_dir, INDEX_SCHEMA, batch_id).select(
+        "text_hash", F.col("doc_id").alias("__idx")
     )
     hits = (
-        hashed.join(
-            index_prior.select(
-                "text_hash", F.col("doc_id").alias("__idx")
-            ),
-            "text_hash",
-        )
+        hashed.join(index, "text_hash")
         .groupBy("doc_id")
         .agg(F.min("__idx").alias("__hit"))
     )
-    in_batch_min = hashed.groupBy("text_hash").agg(
-        F.min("doc_id").alias("__bmin")
-    )
+    in_batch_min = hashed.groupBy("text_hash").agg(F.min("doc_id").alias("__bmin"))
+    lost = F.col("doc_id") != F.col("__bmin")
     canon = (
         hashed.join(hits, "doc_id", "left")
         .join(in_batch_min, "text_hash")
         .select(
             "doc_id",
-            "text_hash",
             F.when(F.col("__hit").isNotNull(), F.lit("dup_of_index"))
-            .when(F.col("doc_id") != F.col("__bmin"), F.lit("dup_of_new"))
+            .when(lost, F.lit("dup_of_new"))
             .otherwise(F.lit("kept"))
             .alias("dup_verdict"),
-            F.coalesce(
-                "__hit",
-                F.when(F.col("doc_id") != F.col("__bmin"), F.col("__bmin")),
-            ).alias("match_id"),
+            F.coalesce("__hit", F.when(lost, F.col("__bmin"))).alias("match_id"),
         )
     )
-
+    keep_final = (
+        F.col("pass_model").cast("boolean")
+        & F.col("pass_badword").cast("boolean")
+        & F.col("pass_lm").cast("boolean")
+        & (F.col("dup_verdict") == "kept")
+    )
     verdicts = (
-        mq.join(bw, "doc_id")
-        .join(lm, "doc_id")
-        .join(canon, "doc_id")
-        .select(
-            "doc_id",
-            "pass_model",
-            "pass_badword",
-            "pass_lm",
-            "dup_verdict",
-            "match_id",
-            (
-                F.col("pass_model").cast("boolean")
-                & F.col("pass_badword").cast("boolean")
-                & F.col("pass_lm").cast("boolean")
-                & (F.col("dup_verdict") == "kept")
-            ).cast("int").alias("keep_final"),
-            F.lit(batch_id).alias("batch_id"),
-        )
+        mq.join(bw, "doc_id").join(lm, "doc_id").join(canon, "doc_id")
+        .select("doc_id", "pass_model", "pass_badword", "pass_lm", "dup_verdict",
+                "match_id", keep_final.cast("int").alias("keep_final"))
     )
-    verdicts.write.mode("overwrite").partitionBy("batch_id").option(
-        "partitionOverwriteMode", "dynamic"
-    ).parquet(verdicts_dir)
+    mb.write(verdicts, verdicts_dir, batch_id)
 
-    # append the newly-canonical hashes (kept rows only — duplicates must
-    # not become canonical); idempotent on replay via anti-join
+    # the newly-canonical hashes (kept rows only — duplicates must not
+    # become canonical). Kept ids join `hashed` (derived from the
+    # persisted batch), NOT `canon`, whose lineage would re-probe the
+    # accreting index — the dominant per-batch cost on a large corpus
     kept = (
-        spark.read.schema(VERDICTS_SCHEMA).parquet(verdicts_dir)
-        .filter(
-            (F.col("batch_id") == batch_id)
-            & (F.col("dup_verdict") == "kept")
-        )
+        mb.own(spark, verdicts_dir, VERDICTS_SCHEMA, batch_id)
+        .filter(F.col("dup_verdict") == "kept")
         .select("doc_id")
     )
-    # join kept ids against `hashed` (derived from the persisted batch),
-    # NOT `canon` — canon's lineage re-probes the accreting index, which
-    # on a large corpus is the dominant per-batch cost, paid twice
-    new_rows = (
-        hashed.join(kept, "doc_id", "left_semi")
-        .select("text_hash", "doc_id")
-        .join(index, ["text_hash", "doc_id"], "left_anti")
-    )
-    new_rows.write.mode("append").parquet(index_dir)
+    mb.write(hashed.join(kept, "doc_id", "left_semi"), index_dir, batch_id)
     d.unpersist()
 
 
-def curation_stream(
-    stream: DataFrame,
-    stats_dir: str,
-    index_dir: str,
-    verdicts_dir: str,
-    checkpoint_dir: str,
-    blocked_sources: DataFrame | None = None,
-    available_now: bool = True,
-):
+def curation_stream(stream: DataFrame, stats_dir: str, index_dir: str,
+                    verdicts_dir: str, checkpoint_dir: str,
+                    blocked_sources: DataFrame | None = None):
     """Run the continuous curation loop on a streaming (doc_id, text[,
     source]) DataFrame. Returns the StreamingQuery."""
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        process_batch(
-            batch_df, batch_id, stats_dir, index_dir, verdicts_dir,
-            blocked_sources=blocked_sources,
-        )
-
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return mb.start(stream, checkpoint_dir, lambda df, bid: process_batch(
+        df, bid, stats_dir, index_dir, verdicts_dir,
+        blocked_sources=blocked_sources))
 
 
 def read_verdicts(spark: SparkSession, verdicts_dir: str) -> DataFrame:
-    if not os.path.isdir(verdicts_dir):
-        return spark.createDataFrame([], VERDICTS_SCHEMA)
-    # explicit schema so the empty-store and real-read branches agree
-    # (partition-column inference would type batch_id int, not long)
-    return spark.read.schema(VERDICTS_SCHEMA).parquet(verdicts_dir)
+    return mb.read(spark, verdicts_dir, VERDICTS_SCHEMA)

@@ -1,51 +1,35 @@
 """Continuous-ingest incremental dedup — the streaming form of
 ``operators.components.minhash_incremental``.
 
-A production corpus is not rebuilt; it ACCRETES: crawl output arrives
-continuously, each arriving document is judged against the signature
-index of everything already accepted, survivors are appended to both
-the corpus and the index, duplicates are tombstoned with an
-attribution. This module runs that loop as a Structured Streaming query
-(``readStream`` → ``foreachBatch``):
+A production corpus is not rebuilt; it ACCRETES: each arriving document
+is judged against the band-key index of everything already accepted,
+kept documents' band keys are appended to the index, and duplicates are
+tombstoned with an attribution. The stream is any streaming DataFrame
+of (doc_id, text) — file source, Kafka, or the crawl engine's documents.
 
-- the stream is any streaming DataFrame of (doc_id, text) — file source,
-  Kafka, or the crawl engine's documents output;
-- per micro-batch, ``foreachBatch`` loads the persisted band-key index
-  (parquet; at scale an Iceberg table bucketed by band_key so the probe
-  join is co-located), runs the same deterministic batch operator, and
-  appends the verdicts + the kept docs' band keys — the index is only
-  ever appended to, mirroring the engine's append-only seen/attempts
-  tables;
-- IN-BATCH duplicates resolve exactly like the batch op (connected
-  components, min doc_id survives), so results are independent of how
-  the stream happens to be chopped into micro-batches ONLY up to
-  arrival order: like the crawl engine's seen-set, first-arrival wins
-  across batches. With ``availableNow`` and a single batch, the output
-  is byte-identical to the batch operator — the equivalence the test
-  asserts.
+In-batch duplicates resolve exactly like the batch operator (connected
+components, min doc_id survives); across batches first arrival wins,
+like the crawl engine's seen-set. A single batch is byte-identical to
+the batch operator.
 
-Exactly-once: foreachBatch can replay a batch after a crash. Both writes
-are idempotent per batch_id: the verdict sink overwrites only its own
-batch_id partition, and the batch's own doc_ids are excluded from the
-probe + the index append is anti-joined against existing rows — so a
-replay after a crash BETWEEN the index append and the checkpoint commit
-reproduces the identical verdicts and appends nothing twice (asserted
-by ``tests/test_streaming_dedup.py::test_replay_idempotent``).
+Replay safety is the shared kernel's (``streaming.microbatch``): a
+replay reproduces identical verdicts and appends nothing twice, and a
+doc that comes back in a later batch is ``dup_of_index`` of its earlier
+self.
 
-Scale: state lives entirely in the index table, not the state store —
-there is no watermark and no unbounded driver memory; a 100 TB corpus's
-index is its band keys (~4 rows/doc), bucketed by band_key so each
-micro-batch probe touches only matching buckets.
+Scale: state lives entirely in the index table (~4 band keys per doc,
+bucketed by band_key at scale so each probe touches only matching
+buckets) — no state store, no watermark, no driver memory growth.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-BANDS_SCHEMA = "doc_id long, band_key string"
+from inform_spark.streaming import microbatch as mb
+
+BANDS_SCHEMA = "doc_id long, band_key string, batch_id long"
 VERDICTS_SCHEMA = "doc_id long, verdict string, match_id long, batch_id long"
 
 
@@ -55,136 +39,70 @@ def init_index(spark: SparkSession, index_dir: str, docs: DataFrame | None = Non
     existing corpus. At scale: an Iceberg table bucketed by band_key."""
     from inform_spark.operators import textops
 
-    seed = (
+    mb.seed(
         textops.minhash_band_keys(docs, k, band)
         if docs is not None
-        else spark.createDataFrame([], BANDS_SCHEMA)
+        else spark.createDataFrame([], BANDS_SCHEMA),
+        index_dir,
     )
-    seed.write.mode("overwrite").parquet(index_dir)
 
 
-def process_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    index_dir: str,
-    verdicts_dir: str,
-    k: int = 8,
-    band: int = 2,
-) -> None:
+@mb.micro_batch
+def process_batch(batch_df: DataFrame, batch_id: int, index_dir: str,
+                  verdicts_dir: str, k: int = 8, band: int = 2) -> None:
     """One micro-batch of the dedup loop — module-level so replay
-    idempotence is directly testable (foreachBatch re-invokes this with
-    the same (batch_df, batch_id) after a crash, possibly after the
-    index append already committed)."""
+    idempotence is directly testable."""
     from inform_spark.operators import textops
     from inform_spark.operators.components import connected_components
 
-    if batch_df.isEmpty():
-        return  # a zero-row first batch must not leave a schema-less dir
     spark = batch_df.sparkSession
-    index = spark.read.schema(BANDS_SCHEMA).parquet(index_dir)
-    # Replay safety: a crash AFTER the kept_bands append but BEFORE the
-    # streaming checkpoint commit replays this batch against an index
-    # that already contains its own band keys — previously-kept docs
-    # would re-verdict as dup_of_index (possibly of themselves). Probe
-    # only the index rows that predate this batch's doc_ids.
-    index_prior = index.join(
-        batch_df.select("doc_id").distinct(), "doc_id", "left_anti"
-    )
-    # minhash_incremental probes (doc_id, band_key) via band keys of
-    # index_docs; here the index already IS band keys, so inline the
-    # probe against it (no re-signature of the corpus)
+    index = mb.prior(spark, index_dir, BANDS_SCHEMA, batch_id)
+    # the index already IS band keys, so the minhash_incremental probe is
+    # inlined against it (no re-signature of the corpus)
     nb = textops.minhash_band_keys(batch_df, k, band).persist()
     hits = (
-        nb.join(
-            index_prior.select(F.col("doc_id").alias("__idx"), "band_key"),
-            "band_key",
-        )
+        nb.join(index.select(F.col("doc_id").alias("__idx"), "band_key"), "band_key")
         .groupBy("doc_id")
         .agg(F.min("__idx").alias("__hit"))
     )
-    survivors_b = nb.join(hits, "doc_id", "left_anti")
     comp = connected_components(
-        textops.star_pairs_from_bands(survivors_b), "a", "b"
+        textops.star_pairs_from_bands(nb.join(hits, "doc_id", "left_anti")), "a", "b"
     ).withColumnRenamed("v", "doc_id")
+    lost = F.col("component") != F.col("doc_id")
     verdicts = (
-        batch_df.select("doc_id")
-        .distinct()
+        batch_df.select("doc_id").distinct()
         .join(hits, "doc_id", "left")
         .join(comp, "doc_id", "left")
         .select(
             "doc_id",
             F.when(F.col("__hit").isNotNull(), F.lit("dup_of_index"))
-            .when(
-                F.col("component").isNotNull()
-                & (F.col("component") != F.col("doc_id")),
-                F.lit("dup_of_new"),
-            )
+            .when(F.col("component").isNotNull() & lost, F.lit("dup_of_new"))
             .otherwise(F.lit("kept"))
             .alias("verdict"),
-            F.coalesce(
-                "__hit",
-                F.when(
-                    F.col("component") != F.col("doc_id"),
-                    F.col("component"),
-                ),
-            ).alias("match_id"),
-            F.lit(batch_id).alias("batch_id"),
+            F.coalesce("__hit", F.when(lost, F.col("component"))).alias("match_id"),
         )
     )
-    # idempotent on replay: the batch overwrites only its own partition
-    verdicts.write.mode("overwrite").partitionBy("batch_id").option(
-        "partitionOverwriteMode", "dynamic"
-    ).parquet(verdicts_dir)
-    # read the just-committed verdicts back rather than recomputing the
-    # whole probe lineage a second time
+    mb.write(verdicts, verdicts_dir, batch_id)
     kept_ids = (
-        spark.read.schema(VERDICTS_SCHEMA).parquet(verdicts_dir)
-        .filter(
-            (F.col("batch_id") == batch_id) & (F.col("verdict") == "kept")
-        )
+        mb.own(spark, verdicts_dir, VERDICTS_SCHEMA, batch_id)
+        .filter(F.col("verdict") == "kept")
         .select("doc_id")
     )
-    kept_bands = nb.join(kept_ids, "doc_id", "left_semi").select(
-        "doc_id", "band_key"
-    )
-    # idempotent append: on replay the crashed attempt's rows are
-    # already in the index — don't append them a second time
-    kept_bands = kept_bands.join(index, ["doc_id", "band_key"], "left_anti")
-    kept_bands.write.mode("append").parquet(index_dir)
+    kept_bands = nb.join(kept_ids, "doc_id", "left_semi").select("doc_id", "band_key")
+    mb.write(kept_bands, index_dir, batch_id)
     nb.unpersist()
 
 
-def dedup_stream(
-    stream: DataFrame,
-    index_dir: str,
-    verdicts_dir: str,
-    checkpoint_dir: str,
-    k: int = 8,
-    band: int = 2,
-    available_now: bool = True,
-):
+def dedup_stream(stream: DataFrame, index_dir: str, verdicts_dir: str,
+                 checkpoint_dir: str, k: int = 8, band: int = 2):
     """Run the continuous dedup loop on a streaming (doc_id, text)
-    DataFrame. Returns the StreamingQuery (caller awaits termination).
-
-    Every micro-batch: probe the index, write (doc_id, verdict,
-    match_id, batch_id) to ``verdicts_dir`` (partitioned by batch_id —
-    idempotent on foreachBatch replay), append kept+new-survivor band
-    keys to ``index_dir``."""
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        process_batch(batch_df, batch_id, index_dir, verdicts_dir, k, band)
-
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    DataFrame; returns the StreamingQuery. Every micro-batch probes the
+    index, writes (doc_id, verdict, match_id, batch_id) to
+    ``verdicts_dir`` and appends the kept docs' band keys to
+    ``index_dir``."""
+    return mb.start(stream, checkpoint_dir, lambda df, bid: process_batch(
+        df, bid, index_dir, verdicts_dir, k, band))
 
 
 def read_verdicts(spark: SparkSession, verdicts_dir: str) -> DataFrame:
-    if not os.path.isdir(verdicts_dir):
-        return spark.createDataFrame([], VERDICTS_SCHEMA)
-    # explicit schema so the empty-store and real-read branches agree
-    # (partition-column inference would type batch_id int, not long)
-    return spark.read.schema(VERDICTS_SCHEMA).parquet(verdicts_dir)
+    return mb.read(spark, verdicts_dir, VERDICTS_SCHEMA)

@@ -8,7 +8,7 @@ continuous stream of (media_ref, phash) features (from
 JPEG since round 5), each arriving image is judged against the
 persisted perceptual-hash band index of everything already accepted,
 kept images' hashes are appended to the index, duplicates are
-tombstoned with an attribution. Per micro-batch, ``foreachBatch`` loads
+tombstoned with an attribution. Per micro-batch, the loop loads
 the persisted store (parquet; at scale an Iceberg table bucketed by
 band_key so the probe join is co-located) and calls the SAME batch
 operator (``phash_incremental`` with ``index_bands=``) — one
@@ -20,14 +20,11 @@ duplicates resolve by connected components with the min media_ref
 surviving, and survivor-only transitivity holds across batches:
 first-arrival wins, like the engine's URL-seen set.
 
-Exactly-once: both writes are idempotent per batch_id — the verdict
-sink overwrites only its own batch_id partition, index rows appended by
-a crashed attempt of THIS batch are recognized by their anchor (anchors
-are this batch's media_refs, globally unique) and excluded from the
-probe, and the append is anti-joined against existing (phash, band_key)
-rows. A replay after a crash between the index append and the
-checkpoint commit reproduces identical verdicts and appends nothing
-twice.
+Replay safety is the shared kernel's (``streaming.microbatch``):
+verdicts and index rows are written per ``batch_id`` partition and the
+probe reads only earlier batches, so a replay reproduces identical
+verdicts and appends nothing twice, and an image that comes back in a
+later batch is ``dup_of_index`` of its earlier self.
 
 Scale: state lives entirely in the index table — no state store, no
 watermark, no driver memory growth; a 10^10-image corpus's index is 4
@@ -36,117 +33,58 @@ rows per DISTINCT phash.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-INDEX_SCHEMA = "phash long, band_key string, anchor string"
-VERDICTS_SCHEMA = (
-    "media_ref string, verdict string, match_ref string, batch_id long"
-)
+from inform_spark.streaming import microbatch as mb
+
+INDEX_SCHEMA = "phash long, band_key string, anchor string, batch_id long"
+VERDICTS_SCHEMA = "media_ref string, verdict string, match_ref string, batch_id long"
 
 
-def init_index(
-    spark: SparkSession, index_dir: str, feats: DataFrame | None = None
-) -> None:
+def init_index(spark: SparkSession, index_dir: str,
+               feats: DataFrame | None = None) -> None:
     """Create the persisted phash band store, optionally seeded with an
     existing image corpus's features. At scale: an Iceberg table
     bucketed by band_key."""
     from inform_spark.operators.multimodal import phash_band_index
 
-    seed = (
+    mb.seed(
         phash_band_index(feats)
         if feats is not None
-        else spark.createDataFrame([], INDEX_SCHEMA)
+        else spark.createDataFrame([], INDEX_SCHEMA),
+        index_dir,
     )
-    seed.select("phash", "band_key", "anchor").write.mode(
-        "overwrite"
-    ).parquet(index_dir)
 
 
-def process_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    index_dir: str,
-    verdicts_dir: str,
-    hamming_max: int = 4,
-) -> None:
+@mb.micro_batch
+def process_batch(batch_df: DataFrame, batch_id: int, index_dir: str,
+                  verdicts_dir: str, hamming_max: int = 4) -> None:
     """One micro-batch of the image-dedup loop — module-level so replay
     idempotence is directly testable."""
-    from inform_spark.operators.multimodal import (
-        phash_band_index,
-        phash_incremental,
-    )
+    from inform_spark.operators.multimodal import phash_band_index, phash_incremental
 
-    if batch_df.isEmpty():
-        return  # a zero-row first batch must not leave a schema-less dir
     spark = batch_df.sparkSession
-    index = spark.read.schema(INDEX_SCHEMA).parquet(index_dir)
-    # Replay safety: rows a crashed attempt of THIS batch appended carry
-    # this batch's media_refs as their anchor; probing them would
-    # re-verdict previously-kept images as dup_of_index of themselves.
-    index_prior = index.join(
-        batch_df.select(F.col("media_ref").alias("anchor")).distinct(),
-        "anchor",
-        "left_anti",
-    )
-    verdicts = phash_incremental(
-        batch_df, index_bands=index_prior, hamming_max=hamming_max
-    ).withColumn("batch_id", F.lit(batch_id))
-    # idempotent on replay: the batch overwrites only its own partition
-    verdicts.write.mode("overwrite").partitionBy("batch_id").option(
-        "partitionOverwriteMode", "dynamic"
-    ).parquet(verdicts_dir)
-    # read the just-committed verdicts back rather than recomputing the
-    # probe lineage a second time
+    index = mb.prior(spark, index_dir, INDEX_SCHEMA, batch_id)
+    verdicts = phash_incremental(batch_df, index_bands=index, hamming_max=hamming_max)
+    mb.write(verdicts, verdicts_dir, batch_id)
     kept_refs = (
-        spark.read.schema(VERDICTS_SCHEMA)
-        .parquet(verdicts_dir)
-        .filter(
-            (F.col("batch_id") == batch_id) & (F.col("verdict") == "kept")
-        )
+        mb.own(spark, verdicts_dir, VERDICTS_SCHEMA, batch_id)
+        .filter(F.col("verdict") == "kept")
         .select("media_ref")
     )
-    kept_feats = batch_df.join(kept_refs, "media_ref", "left_semi").select(
-        "media_ref", "phash"
-    )
-    new_rows = phash_band_index(kept_feats).select(
-        "phash", "band_key", "anchor"
-    )
-    # idempotent append: rows already present (crashed attempt) are
-    # never appended a second time
-    new_rows = new_rows.join(index, ["phash", "band_key"], "left_anti")
-    new_rows.write.mode("append").parquet(index_dir)
+    kept = batch_df.join(kept_refs, "media_ref", "left_semi")
+    mb.write(phash_band_index(kept.select("media_ref", "phash")), index_dir, batch_id)
 
 
-def image_dedup_stream(
-    stream: DataFrame,
-    index_dir: str,
-    verdicts_dir: str,
-    checkpoint_dir: str,
-    hamming_max: int = 4,
-    available_now: bool = True,
-):
+def image_dedup_stream(stream: DataFrame, index_dir: str, verdicts_dir: str,
+                       checkpoint_dir: str, hamming_max: int = 4):
     """Run the continuous image-dedup loop on a streaming
     (media_ref, phash) DataFrame. Returns the StreamingQuery (caller
     awaits termination)."""
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        process_batch(
-            batch_df, batch_id, index_dir, verdicts_dir, hamming_max
-        )
-
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return mb.start(stream, checkpoint_dir, lambda df, bid: process_batch(
+        df, bid, index_dir, verdicts_dir, hamming_max))
 
 
 def read_verdicts(spark: SparkSession, verdicts_dir: str) -> DataFrame:
-    if not os.path.isdir(verdicts_dir):
-        return spark.createDataFrame([], VERDICTS_SCHEMA)
-    # explicit schema so the empty-store and real-read branches agree
-    return spark.read.schema(VERDICTS_SCHEMA).parquet(verdicts_dir)
+    return mb.read(spark, verdicts_dir, VERDICTS_SCHEMA)

@@ -6,22 +6,19 @@ ACCRETES batch by batch, and each micro-batch's documents are verdicted
 against the host statistics accumulated THROUGH that batch. Early
 documents from a spam host can therefore pass before the evidence
 hardens — that is the honest streaming semantics (re-verdicting history
-is a batch job over the verdict log), and with a single
-``availableNow`` batch the verdicts equal the batch operator's output
-exactly (tested byte-equal).
+is a batch job over the verdict log), and with a single batch the
+verdicts equal the batch operator's output exactly (tested byte-equal).
 
-State is two small parquet relations, maintained with the repo's
-exactly-once discipline (``streaming/curation.py`` / ``streaming/
-dedup.py``):
+State is two small parquet relations, both written per ``batch_id``
+partition through the shared replay-idempotent kernel
+(``streaming.microbatch``), so a replay overwrites its own rows and
+cumulative sums never double-count:
 
-- ``pairs`` — first-seen (source, text_hash, batch_id): APPEND with an
-  anti-join against existing rows, so a replayed batch appends nothing
-  twice and the batch's own delta is re-readable by ``batch_id``;
+- ``pairs`` — first-seen (source, text_hash): the batch's pairs that no
+  earlier batch saw;
 - ``stats`` — per-(source, batch_id) additive deltas (n_docs, q_sum,
-  n_low, n_new_distinct), written with DYNAMIC PARTITION OVERWRITE on
-  batch_id: every value is computed deterministically from the batch
-  plus the pairs index, so a replay overwrites its own partition with
-  identical rows and cumulative sums never double-count.
+  n_low, n_new_distinct), each computed deterministically from the batch
+  plus the pairs index.
 
 Scale: per batch, ONE groupBy(source) over the batch (map-side
 combined longs), one anti-join probe of the pairs index on
@@ -39,6 +36,7 @@ from pyspark.sql import functions as F
 
 from inform_spark.operators.reputation import PPM, quality_milli_col
 from inform_spark.operators.textops import _h60
+from inform_spark.streaming import microbatch as mb
 
 PAIRS_SCHEMA = "source string, text_hash long, batch_id long"
 STATS_SCHEMA = (
@@ -54,14 +52,11 @@ VERDICTS_SCHEMA = (
 
 
 def init_state(spark, state_dir: str) -> None:
-    spark.createDataFrame([], PAIRS_SCHEMA).write.mode("overwrite").parquet(
-        os.path.join(state_dir, "pairs")
-    )
-    spark.createDataFrame([], STATS_SCHEMA).write.mode("overwrite").parquet(
-        os.path.join(state_dir, "stats")
-    )
+    for name, schema in (("pairs", PAIRS_SCHEMA), ("stats", STATS_SCHEMA)):
+        mb.seed(spark.createDataFrame([], schema), os.path.join(state_dir, name))
 
 
+@mb.micro_batch
 def process_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -75,8 +70,6 @@ def process_batch(
     """One reputation micro-batch: accrete host evidence, verdict the
     batch against the cumulative stats. Module-level so replay
     idempotence is directly testable."""
-    if batch_df.isEmpty():
-        return
     spark = batch_df.sparkSession
     pairs_dir = os.path.join(state_dir, "pairs")
     stats_dir = os.path.join(state_dir, "stats")
@@ -86,6 +79,7 @@ def process_batch(
     # DETERMINISTIC (min by (text_hash, source)) — dropDuplicates picks
     # by partition order, which would let a replay rebuild different
     # pairs/stats rows and corrupt the accreting state
+    payload = ("text_hash", "source", "quality_milli")
     d = (
         batch_df.select(
             F.col("doc_id").cast("long").alias("doc_id"),
@@ -94,38 +88,21 @@ def process_batch(
             _h60(F.col("text")).alias("text_hash"),
         )
         .groupBy("doc_id")
-        .agg(
-            F.min(
-                F.struct("text_hash", "source", "quality_milli")
-            ).alias("__s")
-        )
-        .select(
-            "doc_id",
-            F.col("__s.source").alias("source"),
-            F.col("__s.quality_milli").alias("quality_milli"),
-            F.col("__s.text_hash").alias("text_hash"),
-        )
+        .agg(F.min(F.struct(*payload)).alias("__s"))
+        .select("doc_id", *[F.col(f"__s.{c}").alias(c) for c in payload])
         .persist()
     )
 
-    # 1) first-seen (source, text_hash) pairs: anti-join append — a
-    # replayed batch finds its own prior rows and appends nothing
-    pairs = spark.read.schema(PAIRS_SCHEMA).parquet(pairs_dir)
-    new_pairs = (
-        d.select("source", "text_hash")
-        .distinct()
-        .join(pairs, ["source", "text_hash"], "left_anti")
-        .withColumn("batch_id", F.lit(batch_id).cast("long"))
-    )
-    new_pairs.write.mode("append").parquet(pairs_dir)
+    # 1) first-seen (source, text_hash) pairs: those no earlier batch saw
+    seen = mb.prior(spark, pairs_dir, PAIRS_SCHEMA, batch_id)
+    new_pairs = d.select("source", "text_hash").distinct()
+    mb.write(new_pairs.join(seen, ["source", "text_hash"], "left_anti"),
+             pairs_dir, batch_id)
 
     # 2) per-batch additive stats delta — every column is deterministic
-    # given the batch and the (idempotent) pairs index, so the dynamic
-    # partition overwrite makes replays byte-identical
+    # given the batch and the pairs index
     own_distinct = (
-        spark.read.schema(PAIRS_SCHEMA)
-        .parquet(pairs_dir)
-        .filter(F.col("batch_id") == batch_id)
+        mb.own(spark, pairs_dir, PAIRS_SCHEMA, batch_id)
         .groupBy("source")
         .agg(F.count(F.lit(1)).cast("long").alias("n_new_distinct"))
     )
@@ -134,32 +111,19 @@ def process_batch(
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.sum("quality_milli").cast("long").alias("q_sum"),
-            F.sum(
-                (F.col("quality_milli") < low_quality_milli).cast("long")
-            ).alias("n_low"),
+            F.sum((F.col("quality_milli") < low_quality_milli).cast("long"))
+            .alias("n_low"),
         )
         .join(own_distinct, "source", "left")
-        .select(
-            "source",
-            "n_docs",
-            "q_sum",
-            "n_low",
-            F.coalesce("n_new_distinct", F.lit(0)).cast("long").alias(
-                "n_new_distinct"
-            ),
-            F.lit(batch_id).cast("long").alias("batch_id"),
-        )
+        .fillna(0, ["n_new_distinct"])
     )
-    delta.write.mode("overwrite").partitionBy("batch_id").option(
-        "partitionOverwriteMode", "dynamic"
-    ).parquet(stats_dir)
+    mb.write(delta, stats_dir, batch_id)
 
-    # 3) cumulative stats THROUGH this batch (<= guards against leftover
-    # later partitions after a rollback) -> host dim -> verdicts
+    # 3) cumulative stats THROUGH this batch (the prior of the next one,
+    # so leftover later partitions after a rollback never count) -> host
+    # dim -> verdicts
     cum = (
-        spark.read.schema(STATS_SCHEMA)
-        .parquet(stats_dir)
-        .filter(F.col("batch_id") <= batch_id)
+        mb.prior(spark, stats_dir, STATS_SCHEMA, batch_id + 1)
         .groupBy("source")
         .agg(
             F.sum("n_docs").cast("long").alias("host_docs"),
@@ -171,12 +135,8 @@ def process_batch(
             "source",
             "host_docs",
             F.expr("__qsum div host_docs").alias("host_mean_quality_milli"),
-            F.expr(f"(__nlow * {PPM}) div host_docs").alias(
-                "host_low_frac_ppm"
-            ),
-            F.expr(f"(__ndist * {PPM}) div host_docs").alias(
-                "host_distinct_ppm"
-            ),
+            F.expr(f"(__nlow * {PPM}) div host_docs").alias("host_low_frac_ppm"),
+            F.expr(f"(__ndist * {PPM}) div host_docs").alias("host_distinct_ppm"),
         )
         .withColumn(
             "host_blocked",
@@ -185,47 +145,18 @@ def process_batch(
             | (F.col("host_distinct_ppm") < min_distinct_ppm),
         )
     )
-    verdicts = (
-        d.drop("text_hash")
-        .join(F.broadcast(cum), "source")
-        .select(
-            "doc_id",
-            "source",
-            "quality_milli",
-            "host_docs",
-            "host_mean_quality_milli",
-            "host_low_frac_ppm",
-            "host_distinct_ppm",
-            "host_blocked",
-            (~F.col("host_blocked")).alias("kept"),
-            F.lit(batch_id).cast("long").alias("batch_id"),
-        )
+    verdicts = d.drop("text_hash").join(F.broadcast(cum), "source").select(
+        "doc_id", "source", "quality_milli", "host_docs", "host_mean_quality_milli",
+        "host_low_frac_ppm", "host_distinct_ppm", "host_blocked",
+        (~F.col("host_blocked")).alias("kept"),
     )
-    verdicts.write.mode("overwrite").partitionBy("batch_id").option(
-        "partitionOverwriteMode", "dynamic"
-    ).parquet(verdicts_dir)
+    mb.write(verdicts, verdicts_dir, batch_id)
     d.unpersist()
 
 
-def reputation_stream(
-    stream: DataFrame,
-    state_dir: str,
-    verdicts_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-    **thresholds,
-):
+def reputation_stream(stream: DataFrame, state_dir: str, verdicts_dir: str,
+                      checkpoint_dir: str, **thresholds):
     """Run the continuous reputation loop on a streaming (doc_id,
     source, text) DataFrame. Returns the StreamingQuery."""
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        process_batch(
-            batch_df, batch_id, state_dir, verdicts_dir, **thresholds
-        )
-
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return mb.start(stream, checkpoint_dir, lambda df, bid: process_batch(
+        df, bid, state_dir, verdicts_dir, **thresholds))

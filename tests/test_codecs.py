@@ -501,6 +501,23 @@ def test_jpeg_progressive_ac_first_and_refine():
     assert (got == _expected_u8(coef)).all()
 
 
+@pytest.mark.parametrize("comps,match", [
+    ([], "component count 0"),
+    ([(i, 0x11, 0) for i in range(1, 6)], "component count 5"),
+    ([(1, 0x01, 0)], "sampling factors 0x01"),
+    ([(1, 0x15, 0)], "sampling factors 0x15"),
+])
+def test_jpeg_bad_sof_rejected(comps, match):
+    """T.81 allows 1..4 components with sampling factors 1..4; anything
+    else is rejected right after the SOF, before a factor of 0 can
+    divide by zero sizing the MCU grid."""
+    from inform_spark.operators import codecs
+
+    jpg = b"\xff\xd8" + _dqt(0, [1] * 64) + _sof0(8, 8, comps) + b"\xff\xd9"
+    with pytest.raises(ValueError, match=match):
+        codecs.decode_jpeg(jpg)
+
+
 def test_jpeg_not_a_jpeg_rejected():
     from inform_spark.operators import codecs
     import pytest
@@ -689,6 +706,30 @@ def test_gif_not_a_gif_rejected():
 
     with pytest.raises(ValueError, match="not a GIF"):
         codecs.decode_gif(b"NOTAGIFxxxxxxxxxx")
+
+
+def test_gif_lzw_kwkwk_chain_stops_at_frame_size():
+    """A crafted KwKwK chain (every code is the next free slot, so each
+    entry is one pixel longer than the last) up to the full 4096-entry
+    table: ~6 KB of codes that would expand to ~8.4 M indices. The
+    decoder must return as soon as the 16x16 frame is full."""
+    import time
+
+    from inform_spark.operators import codecs
+
+    wtr = _LsbWriter()
+    wtr.code(4, 3)  # CLEAR at min code size 2
+    wtr.code(0, 3)
+    for slot in range(6, 4096):
+        wtr.code(slot, max(3, slot.bit_length()))
+    data = wtr.tobytes()
+    assert len(data) > 5_000
+    t = time.perf_counter()
+    idx = codecs._lzw_decode(2, data, 16 * 16)
+    got = codecs.decode_gif(_gif(16, 16, [(9, 9, 9), (0, 0, 0)], 2, data))
+    assert time.perf_counter() - t < 1.0
+    assert idx == [0] * 256
+    assert got.shape == (16, 16, 3) and (got == 9).all()
 
 
 # ---------------------------------------------------------------------------
