@@ -15,9 +15,6 @@ shards built in Arrow UDF batches agree with hashes computed by the JVM.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-
 # xxHash64 constants (public algorithm, Yann Collet, BSD)
 _P1 = 0x9E3779B185EBCA87
 _P2 = 0xC2B2AE3D27D4EB4F
@@ -89,15 +86,3 @@ def xxhash64_signed(s: str, seed: int = 42) -> int:
     """As a signed 64-bit value (Spark LongType representation)."""
     h = xxhash64(s.encode("utf-8"), seed)
     return h - (1 << 64) if h >= (1 << 63) else h
-
-
-def hash_series(urls: pd.Series, seed: int = 42) -> pd.Series:
-    """Vectorized-batch hash of a string Series -> int64 Series."""
-    return pd.Series(
-        np.fromiter(
-            (xxhash64_signed(u, seed) if u is not None else 0 for u in urls),
-            dtype=np.int64,
-            count=len(urls),
-        ),
-        index=urls.index,
-    )

@@ -62,11 +62,3 @@ def text_stream(spans: list[dict]) -> str:
         for s in sorted(spans, key=lambda s: s["offset"])
         if s["kind"] == KIND_TEXT
     )
-
-
-def spans_as_tuples(spans: list[dict]) -> list[tuple]:
-    """Canonical comparison form: (kind, text, media_ref, order)."""
-    return [
-        (s["kind"], s["text"], s["media_ref"], s["offset"])
-        for s in sorted(spans, key=lambda s: s["offset"])
-    ]

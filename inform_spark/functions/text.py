@@ -5,7 +5,6 @@ regexp_replace) the data plane uses the built-in instead.
 
 from __future__ import annotations
 
-import hashlib
 import re
 from datetime import datetime, timezone
 
@@ -14,12 +13,6 @@ _NON_ALNUM_RE = re.compile(r"[^a-z0-9]+")
 _DASHES_RE = re.compile(r"-+")
 _EDGE_DASH_RE = re.compile(r"^-|-$")
 _ILLEGAL_FILE_RE = re.compile(r'[<>:"/\\|?*\x00-\x1F]')
-_MD_ESCAPE_RE = re.compile(r"([\\`*_{}\[\]()#+\-.!|>])")
-
-
-def sha1_hex(s: str) -> str:
-    """Reference src/sources/util.js:9-11 (Spark-side: built-in sha1())."""
-    return hashlib.sha1(s.encode("utf-8")).hexdigest()
 
 
 def slugify(s: str) -> str:
@@ -35,11 +28,6 @@ def slugify(s: str) -> str:
 def sanitize_filename(name: str) -> str:
     """Reference src/sources/util.js:76-78."""
     return _ILLEGAL_FILE_RE.sub("_", name)[:180]
-
-
-def md_escape(s: str) -> str:
-    """Reference src/sources/util.js:85-87."""
-    return _MD_ESCAPE_RE.sub(r"\\\1", s)
 
 
 def to_iso_date(d: str | None) -> str | None:

@@ -17,7 +17,7 @@ from urllib.parse import urljoin, urlsplit, urlunsplit
 
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, StringType
+from pyspark.sql.types import StringType
 
 _DEFAULT_PORTS = {"http": "80", "https": "443", "ws": "80", "wss": "443", "ftp": "21"}
 
@@ -230,35 +230,3 @@ def url_host_udf(url: pd.Series) -> pd.Series:
 @pandas_udf(StringType())
 def url_path_udf(url: pd.Series) -> pd.Series:
     return url.map(lambda u: url_path(u) if u is not None else None)
-
-
-@pandas_udf(StringType())
-def url_path_query_udf(url: pd.Series) -> pd.Series:
-    return url.map(lambda u: url_path_query(u) if u is not None else None)
-
-
-@pandas_udf(StringType())
-def generate_filepath_udf(url: pd.Series) -> pd.Series:
-    return url.map(lambda u: generate_filepath(u) if u is not None else None)
-
-
-def make_resolve_links_udf():
-    """(links: array<string>, base: string) -> array<string> of canonical
-    absolute URLs, order-preserving, invalid entries dropped."""
-
-    @pandas_udf(ArrayType(StringType()))
-    def resolve_links(links: pd.Series, base: pd.Series) -> pd.Series:
-        out = []
-        for lst, b in zip(links, base):
-            if lst is None:
-                out.append([])
-                continue
-            resolved = []
-            for href in lst:
-                r = resolve_url(href, b)
-                if r is not None:
-                    resolved.append(r)
-            out.append(resolved)
-        return pd.Series(out, dtype=object)
-
-    return resolve_links

@@ -36,6 +36,14 @@ decoders are fuzz-smoked: truncations and byte corruptions of valid
 streams must terminate (raise), never hang — crawlers feed these
 hostile bytes.
 
+One pixel budget bounds every image decoder: :func:`check_pixels`
+rejects a claimed size above :data:`MAX_PIXELS` (~67 MP) before any
+pixel or coefficient buffer is allocated — PNG (from IHDR, before the
+inflate), BMP, GIF (the screen and every frame descriptor), JPEG (SOF)
+and VP8L. PNG inflates with an output limit of the frame's
+``h*(stride+1)`` bytes plus one, so a small IDAT that expands to far
+more than its IHDR claims is rejected without ever being held whole.
+
 Perf note: PNG filter reconstruction for types 1/3/4 and the JPEG
 entropy decode are per-symbol Python loops (both recurrences are
 sequential by construction); everything else is vectorized. Fine for
@@ -53,6 +61,17 @@ import numpy as np
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 _PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}
+
+# ~67 MP: a corrupt header claiming 65535x65535 would otherwise allocate
+# tens of GB before any pixel decodes
+MAX_PIXELS = 1 << 26
+
+
+def check_pixels(w: int, h: int) -> None:
+    """The one decode budget: raise before allocating a ``w`` x ``h``
+    image that exceeds :data:`MAX_PIXELS`."""
+    if w * h > MAX_PIXELS:
+        raise ValueError(f"image {w}x{h} exceeds the decode cap")
 
 
 def is_png(b: bytes) -> bool:
@@ -92,10 +111,13 @@ def decode_png(b: bytes) -> np.ndarray:
             f"unsupported PNG variant (depth={depth} color={color} "
             f"interlace={interlace})"
         )
+    check_pixels(w, h)
     nch = _PNG_CHANNELS[color]
-    raw = zlib.decompress(b"".join(idat))
     stride = w * nch
-    if len(raw) != h * (stride + 1):
+    size = h * (stride + 1)
+    inflate = zlib.decompressobj()
+    raw = inflate.decompress(b"".join(idat), size + 1)
+    if len(raw) != size or not inflate.eof:
         raise ValueError("IDAT length mismatch")
     out = np.empty((h, stride), dtype=np.uint8)
     prev = np.zeros(stride, dtype=np.uint8)
@@ -177,6 +199,7 @@ def decode_bmp(b: bytes) -> np.ndarray:
         raise ValueError(f"unsupported BMP (bpp={bpp} comp={compression})")
     flip = h_signed > 0
     h = abs(h_signed)
+    check_pixels(w, h)
     nb = bpp // 8
     stride = ((w * nb + 3) // 4) * 4
     if data_off + stride * h > len(b):
@@ -527,11 +550,8 @@ def decode_jpeg(b: bytes) -> np.ndarray:
                     # T.81 B.2.2: sampling factors are 1..4; a 0 would
                     # divide by zero sizing the MCU grid below
                     raise ValueError(f"bad JPEG sampling factors 0x{hv:02X}")
+            check_pixels(w, h)
             frame = {"h": h, "w": w, "comps": comps}
-            if h * w > (1 << 26):
-                # ~67 MP cap: a corrupt SOF claiming 65535x65535 would
-                # allocate tens of GB before any pixel decodes
-                raise ValueError(f"image {w}x{h} exceeds the decode cap")
             hmax = max(c["h"] for c in comps)
             vmax = max(c["v"] for c in comps)
             mcus_x = -(-w // (8 * hmax))
@@ -798,8 +818,7 @@ def decode_gif(b: bytes) -> np.ndarray:
     if not is_gif(b):
         raise ValueError("not a GIF")
     w, h, flags, _bg, _ar = struct.unpack("<HHBBB", b[6:13])
-    if w * h > (1 << 26):
-        raise ValueError(f"image {w}x{h} exceeds the decode cap")
+    check_pixels(w, h)
     pos = 13
     gct = None
     if flags & 0x80:
@@ -822,6 +841,7 @@ def decode_gif(b: bytes) -> np.ndarray:
         if blk != 0x2C:
             raise ValueError(f"unexpected GIF block 0x{blk:02X}")
         ix, iy, iw, ih, iflags = struct.unpack("<HHHHB", b[pos : pos + 9])
+        check_pixels(iw, ih)
         pos += 9
         ct = gct
         if iflags & 0x80:

@@ -22,6 +22,11 @@ Design for scale:
   bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch``.
 - partition by ``pmod(xxhash64(media_ref), N)`` — content-hash partitioning
   balances skew from hot documents.
+- the image, audio and video feature stages share ONE row loop
+  (``_map_rows``) that owns the repartition, the Arrow batch loop and
+  the try/except turning any decode exception into NULL features plus
+  an ``error`` status: untrusted bytes yield a verdict, never a failed
+  task.
 - metadata (width/height/format/...) lives in NARROW typed columns so
   filters like ``width >= 512`` prune without touching bytes (column
   pruning keeps the binary out of the scan unless selected).
@@ -181,54 +186,61 @@ def decode_image_stub(content: bytes | None, ref: str) -> dict:
     }
 
 
-def image_features(media: DataFrame, partitions: int | None = None) -> DataFrame:
-    """Decode + feature-extract via mapInPandas (Arrow-batched, binary
-    column never leaves the executor). Content-hash repartition balances
-    hot-document skew before the CPU-heavy stage."""
+def _map_rows(media: DataFrame, partitions: int | None, schema: StructType,
+              row) -> DataFrame:
+    """The one row loop every media feature stage runs: content-hash
+    repartition (``pmod(xxhash64(media_ref), N)`` balances hot-document
+    skew before the CPU-heavy decode), then ``mapInPandas`` over Arrow
+    batches, so the binary column never leaves the executor.
+    ``row(content, media_ref)`` returns ``(features, status)``; ANY
+    exception it raises becomes NULL features and status ``'error'`` —
+    untrusted bytes yield a verdict, never a failed task. ``schema`` is
+    (media_ref, doc_id, *feature columns, status)."""
     n = partitions or media.sparkSession.sparkContext.defaultParallelism
+    features = schema.names[2:-1]
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = {
-                "media_ref": [], "doc_id": [], "width": [], "height": [],
-                "mean_luma": [], "phash": [], "decode_ok": [],
-            }
+            rows = []
             for ref, doc, content in zip(
                 pdf["media_ref"], pdf["doc_id"], pdf["content"]
             ):
-                out["media_ref"].append(ref)
-                out["doc_id"].append(doc)
                 try:
-                    f, mode = decode_image(
+                    f, status = row(
                         bytes(content) if content is not None else None, ref
                     )
-                    out["width"].append(f["width"])
-                    out["height"].append(f["height"])
-                    out["mean_luma"].append(f["mean_luma"])
-                    out["phash"].append(f["phash"])
-                    out["decode_ok"].append(mode)
                 except Exception:
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["mean_luma"].append(None)
-                    out["phash"].append(None)
-                    out["decode_ok"].append("error")
-            yield pd.DataFrame(out)
+                    f, status = {}, "error"
+                rows.append([ref, doc, *(f.get(c) for c in features), status])
+            yield pd.DataFrame(rows, columns=schema.names)
 
-    return (
-        media.repartition(n, F.pmod(F.xxhash64("media_ref"), F.lit(n)))
-        .mapInPandas(extract, schema=IMAGE_FEATURES)
-    )
+    return media.repartition(
+        n, F.pmod(F.xxhash64("media_ref"), F.lit(n))
+    ).mapInPandas(extract, schema=schema)
+
+
+def image_features(media: DataFrame, partitions: int | None = None) -> DataFrame:
+    """Decode + feature-extract every row with :func:`decode_image`
+    (decode_ok ok | stub | error) on the shared row loop
+    :func:`_map_rows`."""
+    return _map_rows(media, partitions, IMAGE_FEATURES, decode_image)
 
 
 def resize_images(media: DataFrame, max_px: int = 256) -> DataFrame:
     """Thumbnail stage: REAL resize for PNG/BMP content (decode via
     operators/codecs, deterministic block-mean downscale to fit
     ``max_px``, re-encode as PNG — format column becomes 'png'); the
-    deterministic truncation stub for undecodable formats. Same
-    mapInPandas shape either way: the binary column never leaves the
-    executor, Arrow batches bound memory."""
+    deterministic truncation stub for undecodable formats, and for
+    PNG/BMP bytes that fail to decode, so hostile bytes never fail the
+    task. Same mapInPandas shape either way: the binary column never
+    leaves the executor, Arrow batches bound memory."""
     from inform_spark.operators import codecs
+
+    def decoded(b: bytes) -> np.ndarray | None:
+        try:
+            return codecs.decode_png(b) if codecs.is_png(b) else codecs.decode_bmp(b)
+        except Exception:  # not PNG/BMP, or hostile bytes that fail to decode
+            return None
 
     def shrink(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -239,12 +251,8 @@ def resize_images(media: DataFrame, max_px: int = 256) -> DataFrame:
                     fmt.append(f)
                     continue
                 b = bytes(c)
-                if codecs.is_png(b) or codecs.is_bmp(b):
-                    arr = (
-                        codecs.decode_png(b)
-                        if codecs.is_png(b)
-                        else codecs.decode_bmp(b)
-                    )
+                arr = decoded(b)
+                if arr is not None:
                     h, w = arr.shape[:2]
                     if arr.shape[2] < 3:  # promote gray to RGB for encode
                         arr = np.repeat(arr[:, :, :1], 3, axis=2)
@@ -595,53 +603,22 @@ AUDIO_FEATURES = StructType(
 )
 
 
+def _wav_row(content: bytes | None, ref: str) -> tuple[dict, str]:
+    from inform_spark.operators import codecs
+
+    return codecs.decode_wav(content), "ok"
+
+
 def audio_features(media: DataFrame, partitions: int | None = None) -> DataFrame:
-    """Audio feature extraction via mapInPandas: REAL WAV-PCM decode
+    """Audio feature extraction: REAL WAV-PCM decode
     (operators/codecs.decode_wav — RIFF chunk walk, 16-bit PCM) for
     sample_rate / channels / duration / RMS; rows whose bytes are not a
     decodable WAV come back decode_ok='error' with NULL features (an
     explicit verdict — compressed formats stay blocked until a codec
-    library exists in the environment). Same scale shape as
-    image_features: content-hash repartition, Arrow batches, binary
-    never leaves the executor."""
-    from inform_spark.operators import codecs
-
-    n = partitions or media.sparkSession.sparkContext.defaultParallelism
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "media_ref": [], "doc_id": [], "sample_rate": [],
-                "n_channels": [], "duration_ms": [], "rms": [],
-                "decode_ok": [],
-            }
-            for ref, doc, content in zip(
-                pdf["media_ref"], pdf["doc_id"], pdf["content"]
-            ):
-                out["media_ref"].append(ref)
-                out["doc_id"].append(doc)
-                try:
-                    f = codecs.decode_wav(
-                        bytes(content) if content is not None else b""
-                    )
-                    out["sample_rate"].append(f["sample_rate"])
-                    out["n_channels"].append(f["n_channels"])
-                    out["duration_ms"].append(f["duration_ms"])
-                    out["rms"].append(f["rms"])
-                    out["decode_ok"].append("ok")
-                except Exception:
-                    out["sample_rate"].append(None)
-                    out["n_channels"].append(None)
-                    out["duration_ms"].append(None)
-                    out["rms"].append(None)
-                    out["decode_ok"].append("error")
-            yield pd.DataFrame(out)
-
-    return (
-        media.filter(F.col("kind") == "audio")
-        .repartition(n, F.pmod(F.xxhash64("media_ref"), F.lit(n)))
-        .mapInPandas(extract, schema=AUDIO_FEATURES)
-    )
+    library exists in the environment). Runs on the shared row loop
+    :func:`_map_rows`."""
+    audio = media.filter(F.col("kind") == "audio")
+    return _map_rows(audio, partitions, AUDIO_FEATURES, _wav_row)
 
 
 VIDEO_METADATA = StructType(
@@ -660,8 +637,22 @@ VIDEO_METADATA = StructType(
 )
 
 
+def _mp4_row(content: bytes | None, ref: str) -> tuple[dict, str]:
+    from inform_spark.operators import codecs
+
+    m = codecs.parse_mp4(content)
+    vid = next((t for t in m["tracks"] if t["kind"] == "video"), {})
+    aud = next((t for t in m["tracks"] if t["kind"] == "audio"), {})
+    return {
+        "major_brand": m["major_brand"], "duration_ms": m["duration_ms"],
+        "n_tracks": len(m["tracks"]), "video_codec": vid.get("codec"),
+        "width": vid.get("width"), "height": vid.get("height"),
+        "audio_codec": aud.get("codec"),
+    }, "ok"
+
+
 def video_metadata(media: DataFrame, partitions: int | None = None) -> DataFrame:
-    """Video container metadata via mapInPandas: REAL ISO BMFF box walk
+    """Video container metadata: REAL ISO BMFF box walk
     (operators/codecs.parse_mp4 — ftyp/mvhd/trak/tkhd/mdhd/hdlr/stsd/
     stsz per ISO/IEC 14496-12) for duration, track layout, codec
     fourccs, and display dimensions — the structural pass a 100 TB
@@ -669,61 +660,10 @@ def video_metadata(media: DataFrame, partitions: int | None = None) -> DataFrame
     Frame decode stays behind the disclosed stub seam
     (sample_frames_stub) until a codec library exists in the
     environment; the metadata columns are real. Non-BMFF bytes come
-    back parse_ok='error' with NULL features — an explicit verdict,
-    same contract as audio_features. Scale shape identical to
-    image_features: content-hash repartition, Arrow batches, binary
-    never leaves the executor."""
-    from inform_spark.operators import codecs
-
-    n = partitions or media.sparkSession.sparkContext.defaultParallelism
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "media_ref": [], "doc_id": [], "major_brand": [],
-                "duration_ms": [], "n_tracks": [], "video_codec": [],
-                "width": [], "height": [], "audio_codec": [],
-                "parse_ok": [],
-            }
-            for ref, doc, content in zip(
-                pdf["media_ref"], pdf["doc_id"], pdf["content"]
-            ):
-                out["media_ref"].append(ref)
-                out["doc_id"].append(doc)
-                try:
-                    m = codecs.parse_mp4(
-                        bytes(content) if content is not None else b""
-                    )
-                    vid = next(
-                        (t for t in m["tracks"] if t["kind"] == "video"),
-                        None,
-                    )
-                    aud = next(
-                        (t for t in m["tracks"] if t["kind"] == "audio"),
-                        None,
-                    )
-                    out["major_brand"].append(m["major_brand"])
-                    out["duration_ms"].append(m["duration_ms"])
-                    out["n_tracks"].append(len(m["tracks"]))
-                    out["video_codec"].append(vid["codec"] if vid else None)
-                    out["width"].append(vid["width"] if vid else None)
-                    out["height"].append(vid["height"] if vid else None)
-                    out["audio_codec"].append(aud["codec"] if aud else None)
-                    out["parse_ok"].append("ok")
-                except Exception:
-                    for k in (
-                        "major_brand", "duration_ms", "n_tracks",
-                        "video_codec", "width", "height", "audio_codec",
-                    ):
-                        out[k].append(None)
-                    out["parse_ok"].append("error")
-            yield pd.DataFrame(out)
-
-    return (
-        media.filter(F.col("kind") == "video")
-        .repartition(n, F.pmod(F.xxhash64("media_ref"), F.lit(n)))
-        .mapInPandas(extract, schema=VIDEO_METADATA)
-    )
+    back parse_ok='error' with NULL features. Runs on the shared row
+    loop :func:`_map_rows`."""
+    video = media.filter(F.col("kind") == "video")
+    return _map_rows(video, partitions, VIDEO_METADATA, _mp4_row)
 
 
 def media_boilerplate(

@@ -42,6 +42,8 @@ import struct
 
 import numpy as np
 
+from inform_spark.operators.codecs import check_pixels
+
 # order in which code-length-code lengths are transmitted (spec 5.2.2)
 _CLC_ORDER = [17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15]
 
@@ -425,8 +427,7 @@ def decode_vp8l(payload: bytes) -> np.ndarray:
     br.bit()  # alpha-used hint
     if br.read(3) != 0:
         raise ValueError("unsupported VP8L version")
-    if w * h > (1 << 26):
-        raise ValueError(f"image {w}x{h} exceeds the decode cap")
+    check_pixels(w, h)
 
     transforms = []  # applied in reverse order after pixel decode
     xsize = w

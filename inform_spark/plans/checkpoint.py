@@ -86,10 +86,26 @@ class SnapshotTable:
     def _manifest_path(self, version: int) -> str:
         return os.path.join(self.manifest_dir, f"v{version}.json")
 
-    def load_version(self, version: int) -> None:
+    def _drop_cache(self) -> None:
         if self._cache_df is not None:
             self._cache_df.unpersist(blocking=False)
             self._cache_df = None
+
+    def _stage(self, dirs: list[str]) -> int:
+        """Stage snapshot version+1 pinning ``dirs``: write its manifest
+        atomically, make it the current state and drop the cached read.
+        Returns the new version."""
+        new_version = self._version + 1
+        _atomic_write_json(
+            self._manifest_path(new_version),
+            {"version": new_version, "dirs": dirs},
+        )
+        self._dirs, self._version = dirs, new_version
+        self._drop_cache()
+        return new_version
+
+    def load_version(self, version: int) -> None:
+        self._drop_cache()
         if version == 0:
             self._dirs, self._version = [], 0
             return
@@ -121,17 +137,7 @@ class SnapshotTable:
         if n_files is not None:
             df = df.repartition(n_files) if shuffle else df.coalesce(n_files)
         df.write.parquet(out, mode="overwrite")
-        new_version = self._version + 1
-        _atomic_write_json(
-            self._manifest_path(new_version),
-            {"version": new_version, "dirs": self._dirs + [out]},
-        )
-        self._dirs = self._dirs + [out]
-        self._version = new_version
-        if self._cache_df is not None:
-            self._cache_df.unpersist(blocking=False)
-            self._cache_df = None
-        return new_version
+        return self._stage(self._dirs + [out])
 
     def append_rows(self, rows: list[tuple], label: str) -> int:
         """Driver-side append of a tiny row set (seed frontier, per-batch
@@ -152,17 +158,7 @@ class SnapshotTable:
             schema=arrow_schema,
         )
         pq.write_table(table, os.path.join(out, "part-00000.parquet"))
-        new_version = self._version + 1
-        _atomic_write_json(
-            self._manifest_path(new_version),
-            {"version": new_version, "dirs": self._dirs + [out]},
-        )
-        self._dirs = self._dirs + [out]
-        self._version = new_version
-        if self._cache_df is not None:
-            self._cache_df.unpersist(blocking=False)
-            self._cache_df = None
-        return new_version
+        return self._stage(self._dirs + [out])
 
     # -- Iceberg-shaped snapshot operations ---------------------------------
     def read_at(self, version: int) -> DataFrame:
@@ -194,17 +190,7 @@ class SnapshotTable:
         until ``vacuum`` expires them."""
         out = os.path.join(self.data_dir, f"compact-{uuid.uuid4().hex[:8]}")
         self.read().repartition(n_files).write.parquet(out, mode="overwrite")
-        new_version = self._version + 1
-        _atomic_write_json(
-            self._manifest_path(new_version),
-            {"version": new_version, "dirs": [out]},
-        )
-        self._dirs = [out]
-        self._version = new_version
-        if self._cache_df is not None:
-            self._cache_df.unpersist(blocking=False)
-            self._cache_df = None
-        return new_version
+        return self._stage([out])
 
     def vacuum(self, committed_version: int | None = None) -> int:
         """Expire everything but the current snapshot: delete data dirs

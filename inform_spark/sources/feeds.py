@@ -525,14 +525,6 @@ def ingest_feeds(feeds_df: DataFrame, limit: int = DEFAULT_LIMIT) -> DataFrame:
     return feeds_df.mapInPandas(parse, schema=ITEM)
 
 
-def union_sources(*dfs: DataFrame) -> DataFrame:
-    """O5: same-schema union of per-source item DataFrames."""
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    return out
-
-
 # ---------------------------------------------------------------------------
 # X10: item → markdown render (src/sources/render.js:15-181)
 # ---------------------------------------------------------------------------

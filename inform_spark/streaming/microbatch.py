@@ -19,7 +19,8 @@ with the same (rows, batch_id). The rule:
   seed file would be silently dropped by the reader once any
   ``batch_id=k/`` partition exists.
 
-Empty batches are skipped (:func:`micro_batch`), so a zero-row first
+Each batch is persisted for the length of its loop and empty batches
+are skipped (:func:`micro_batch`), so a zero-row first
 trigger never leaves a schema-less directory behind; :func:`read`
 returns an empty frame for a table no batch has created yet.
 """
@@ -37,12 +38,19 @@ SEED_BATCH = -1
 
 def micro_batch(process):
     """Decorate a loop's ``process_batch(batch_df, batch_id, ...)`` so
-    an empty batch is a no-op — for the stream and for direct calls."""
+    an empty batch is a no-op — for the stream and for direct calls —
+    and the batch is computed once: it is persisted for the loop's
+    several Spark actions (an image batch would otherwise re-decode its
+    media for each one) and released when the loop returns or raises."""
 
     @functools.wraps(process)
     def run(batch_df: DataFrame, batch_id: int, *args, **kwargs) -> None:
-        if not batch_df.isEmpty():
-            process(batch_df, batch_id, *args, **kwargs)
+        batch_df = batch_df.persist()
+        try:
+            if not batch_df.isEmpty():
+                process(batch_df, batch_id, *args, **kwargs)
+        finally:
+            batch_df.unpersist()
 
     return run
 

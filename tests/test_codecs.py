@@ -903,8 +903,21 @@ def _valid_fixtures():
         + p2.tobytes()
         + b"\xff\xd9"
     )
+    px = bytes([0, 0, 255, 0, 255, 0, 0, 0]) + bytes([255, 0, 0, 30, 20, 10, 0, 0])
+    bmp = (
+        b"BM" + struct.pack("<IHHI", 54 + len(px), 0, 0, 54)
+        + struct.pack("<IiiHHIIiiII", 40, 2, 2, 1, 24, 0, len(px), 2835, 2835, 0, 0)
+        + px
+    )
+    pcm = np.array([0, 16384, -16384, 0, 77, -77], dtype="<i2").tobytes()
+    fmt = struct.pack("<HHIIHH", 1, 2, 8000, 32000, 4, 16)
+    riff = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+    riff += b"data" + struct.pack("<I", len(pcm)) + pcm
+    wav = b"RIFF" + struct.pack("<I", len(riff)) + riff
     return {
         "png": (png, codecs.decode_png),
+        "bmp": (bmp, codecs.decode_bmp),
+        "wav": (wav, codecs.decode_wav),
         "jpeg": (jpg, codecs.decode_jpeg),
         "jpeg-prog": (prog, codecs.decode_jpeg),
         "gif": (gif, codecs.decode_gif),
@@ -935,3 +948,92 @@ def test_codecs_terminate_on_byte_corruption():
                 dec(bytes(mut))
             except Exception:
                 pass
+
+
+# ---------------------------------------------------------------------------
+# The one pixel budget (codecs.check_pixels): a claimed size is judged
+# before anything is allocated, so a few KB of hostile bytes cannot
+# make a decoder hold hundreds of MB.
+# ---------------------------------------------------------------------------
+
+
+def _peak_mb_raising(decode, data):
+    import tracemalloc
+
+    tracemalloc.start()
+    try:
+        with pytest.raises(ValueError):
+            decode(data)
+        return tracemalloc.get_traced_memory()[1] / 2**20
+    finally:
+        tracemalloc.stop()
+
+
+def test_png_idat_inflate_bounded_by_frame_size():
+    """A 16x16 RGB IHDR over ~65 KB of IDAT that inflates to 64 MB: the
+    inflate stops one byte past the frame's 16*(48+1) bytes."""
+    def chunk(typ, data):
+        return (
+            struct.pack(">I", len(data)) + typ + data
+            + struct.pack(">I", zlib.crc32(typ + data) & 0xFFFFFFFF)
+        )
+
+    idat = zlib.compress(b"\0" * (64 << 20), 9)
+    png = (
+        codecs.PNG_SIG
+        + chunk(b"IHDR", struct.pack(">IIBBBBB", 16, 16, 8, 2, 0, 0, 0))
+        + chunk(b"IDAT", idat)
+        + chunk(b"IEND", b"")
+    )
+    assert len(png) < 100_000
+    assert _peak_mb_raising(codecs.decode_png, png) < 16
+
+
+def test_gif_frame_descriptor_checked_against_pixel_budget():
+    """A 1x1 screen whose frame descriptor claims 65535x65535, over the
+    KwKwK chain plus 1,500 full-table codes (~7.9 KB that would expand
+    to ~14 M indices): rejected at the descriptor."""
+    wtr = _LsbWriter()
+    wtr.code(4, 3)  # CLEAR at min code size 2
+    wtr.code(0, 3)
+    for slot in range(6, 4096):
+        wtr.code(slot, max(3, slot.bit_length()))
+    for _ in range(1500):
+        wtr.code(4095, 12)
+    lzw = wtr.tobytes()
+    data = b"".join(
+        bytes([len(lzw[i : i + 255])]) + lzw[i : i + 255]
+        for i in range(0, len(lzw), 255)
+    )
+    gif = (
+        b"GIF89a" + struct.pack("<HHBBB", 1, 1, 0x80, 0, 0)
+        + bytes([9, 9, 9, 0, 0, 0])
+        + b"\x2c" + struct.pack("<HHHHB", 0, 0, 65535, 65535, 0)
+        + b"\x02" + data + b"\x00\x3b"
+    )
+    assert 7_500 < len(gif) < 8_500
+    assert _peak_mb_raising(codecs.decode_gif, gif) < 16
+
+
+def test_resize_images_truncated_png_takes_the_stub_path(spark):
+    """A PNG whose IDAT is cut short used to fail the task with
+    zlib.error; it now gets the truncation stub, format unchanged."""
+    import pandas as pd
+
+    from inform_spark.operators import multimodal as mm
+
+    png = codecs.encode_png(np.full((16, 8, 3), 200, dtype=np.uint8))
+    cut = png[:-20]  # drops IEND and the tail of the IDAT stream
+    media = spark.createDataFrame(
+        pd.DataFrame({
+            "media_ref": ["ok.png", "cut.png"], "doc_id": ["1", "1"],
+            "kind": ["image", "image"], "content": [png, cut],
+            "content_len": [len(png), len(cut)], "format": ["png", "png"],
+        }),
+        schema=mm.MEDIA,
+    )
+    got = {r["media_ref"]: r for r in mm.resize_images(media, max_px=4).collect()}
+    assert codecs.decode_png(bytes(got["ok.png"]["content"])).shape == (4, 2, 3)
+    assert bytes(got["cut.png"]["content"]) == cut[:16]
+    assert got["cut.png"]["format"] == "png"
+    assert got["cut.png"]["content_len"] == 16
