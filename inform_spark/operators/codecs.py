@@ -874,8 +874,13 @@ def decode_gif(b: bytes) -> np.ndarray:
             un = np.empty_like(grid)
             un[order] = grid
             grid = un
+        # a frame reaching past the logical screen is clipped to it, as
+        # browsers do
+        grid = grid[: max(h - iy, 0), : max(w - ix, 0)]
         frame = np.zeros((h, w, 3), dtype=np.uint8)
-        frame[iy : iy + ih, ix : ix + iw] = ct[np.clip(grid, 0, len(ct) - 1)]
+        frame[iy : iy + grid.shape[0], ix : ix + grid.shape[1]] = ct[
+            np.clip(grid, 0, len(ct) - 1)
+        ]
         return frame
     raise ValueError("GIF has no image descriptor")
 

@@ -212,7 +212,10 @@ def _map_rows(media: DataFrame, partitions: int | None, schema: StructType,
                 except Exception:
                     f, status = {}, "error"
                 rows.append([ref, doc, *(f.get(c) for c in features), status])
-            yield pd.DataFrame(rows, columns=schema.names)
+            # object columns: inferred dtypes would turn ints plus None
+            # into float64 and cut a 63-bit phash to 53 bits whenever one
+            # row of the batch is an error; Arrow casts from the values
+            yield pd.DataFrame(rows, columns=schema.names, dtype=object)
 
     return media.repartition(
         n, F.pmod(F.xxhash64("media_ref"), F.lit(n))

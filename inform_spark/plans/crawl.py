@@ -27,8 +27,13 @@ Per batch:
 6. discover       = posexplode(links) → native filters (host F2, base-path
                     F3, extension F4 via rlike, globs F5, robots F6 via
                     closure UDF or broadcast join) → keep-first dedup (T7)
-                    → anti-join frontier (J1) → queue-cap admission (O3)
-7. append frontier/attempts/lineage, atomic catalog commit (T6)
+                    → anti-join frontier (J1, bloom pre-probe optional)
+7. admit          = the candidates are written ONCE as the batch's
+                    frontier delta and counted from its parquet footers;
+                    only a cap that applies (template cap, O3 drop-new
+                    queue cap) un-stages it and rewrites the capped rows
+                    from that directory
+8. append lineage, atomic catalog commit (T6)
 
 Ordering guarantee: `frontier_offset` is a monotonic BIGINT encoding
 (batch+1, parent-rank-in-batch, link-index), so `ORDER BY frontier_offset`
@@ -157,8 +162,7 @@ class CrawlConfig:
     # frontier (the reference has only the global queue cap,
     # src/WebCrawler.js:553-560). Order-stable: the kept prefix is the
     # lowest frontier_offsets, so non-trap crawl order is unchanged.
-    # None = off (zero plan change). Costs one extra count job per batch
-    # when enabled (drop accounting).
+    # None = off (zero plan change).
     template_cap: int | None = None
     # politeness granularity: "host" (reference-equal default — the
     # budget keys on the hostname, src/WebCrawler.js:265-267) or "ip"
@@ -906,6 +910,115 @@ class CrawlEngine:
         return dedup
 
     # ------------------------------------------------------------------
+    def _admit(
+        self, delta: DataFrame, live_left: int, robots_filter, robots_join_dim
+    ) -> tuple[int, int, int]:
+        """Admission for the batch whose attempts ``delta`` was just
+        written: discover → seen check → caps → frontier append.
+        ``live_left`` is the live frontier left after this batch.
+
+        The candidates are written ONCE, as the batch's frontier delta,
+        and counted from its parquet footers (no cache, no count job; not
+        an Observation either: AQE can elide its CollectMetrics node on
+        an empty candidate set, wedging ``Observation.get``).
+        Only a cap that applies rewrites it: the delta is un-staged and
+        the capped rows are read back from the superseded directory — an
+        orphan no commit pins, which resume ignores and ``vacuum``
+        removes. The template cap runs whenever it is set, then the O3
+        drop-new queue cap (reference src/WebCrawler.js:553-560) when the
+        candidates outgrow ``max_queue_size - live_left``; both keep the
+        lowest frontier_offsets.
+
+        Returns ``(n_cand, n_admit, n_tpl_dropped)``; ``n_cand`` counts
+        the candidates that reach the queue cap, so ``n_cand - n_admit``
+        is the queue-cap drop."""
+        cfg = self.cfg
+        frontier_t = self.catalog.tables["frontier"]
+        label = f"b{self.batch_id}"
+        # reads ONLY (depth, parent_rank, links) from the attempts delta
+        # (column pruning skips spans)
+        dedup = self._discover(
+            delta.filter("is_doc").select(
+                "depth", "parent_rank", "links", "attempted_in_batch"
+            ),
+            robots_filter,
+            robots_join_dim,
+        )
+        self._resolve_bloom()
+        net_urls = self._net_frontier(frontier_t.read(cached=True)).select("url")
+        probed = None
+        try:
+            if self._bloom is not None:
+                from inform_spark.operators.bloom import bloom_partition
+
+                # persist the probed candidates BEFORE branching: the
+                # maybe/fresh filters and their union would otherwise
+                # re-execute the whole discover pipeline (explode + robots
+                # UDF + dedup shuffle + bloom probe) once per branch
+                maybe_seen, fresh, probed = bloom_partition(
+                    dedup, self._bloom, persist=True
+                )
+                new_links = fresh.unionByName(
+                    maybe_seen.join(net_urls, "url", "left_anti")
+                )
+            else:
+                new_links = dedup.join(net_urls, "url", "left_anti")
+            # the append IS the one materialization of the discover
+            # pipeline. coalesce (not repartition): the in-batch dedup
+            # groupBy upstream is already a shuffle boundary, so this only
+            # narrows the small post-shuffle tail (probe/anti-join/union)
+            frontier_t.append(
+                new_links.select(*schemas.FRONTIER.names),
+                label, n_files=1, shuffle=False,
+            )
+        finally:
+            if probed is not None:
+                probed.unpersist()
+        n_cand = frontier_t.last_dir_row_count()
+
+        def rewrite(cap) -> int:
+            src = self.spark.read.schema(schemas.FRONTIER).parquet(
+                frontier_t.last_dir
+            )
+            frontier_t.load_version(frontier_t.version - 1)
+            frontier_t.append(cap(src), label, n_files=1, shuffle=False)
+            return frontier_t.last_dir_row_count()
+
+        n_tpl_dropped = 0
+        if cfg.template_cap is not None:
+            # structural trap cap: the per-(host, template) window sorts
+            # only this batch's candidates
+            from inform_spark.operators.traps import url_template_from_path
+
+            tpl_w = Window.partitionBy(
+                "host", url_template_from_path(F.col("path"))
+            ).orderBy("frontier_offset")
+            n_pre_tpl = n_cand
+            n_cand = rewrite(
+                lambda src: src.withColumn("__tr", F.row_number().over(tpl_w))
+                .filter(F.col("__tr") <= cfg.template_cap)
+                .drop("__tr")
+            )
+            n_tpl_dropped = n_pre_tpl - n_cand
+        n_admit = n_cand
+        if cfg.max_queue_size is not None:
+            capacity = max(cfg.max_queue_size - live_left, 0)
+            if n_cand > capacity:
+                n_admit = rewrite(
+                    lambda src: src.orderBy("frontier_offset").limit(capacity)
+                )
+                if not self.queue_warned:
+                    self.queue_warned = True
+                    # reference warns once when the queue cap first binds
+                    logger.warning(
+                        "frontier queue cap %s reached in batch %s: %s "
+                        "candidate links dropped (lowest frontier_offset "
+                        "admitted first)",
+                        cfg.max_queue_size, self.batch_id, n_cand - n_admit,
+                    )
+        return n_cand, n_admit, n_tpl_dropped
+
+    # ------------------------------------------------------------------
     def run(self, resume: bool = False, max_batches: int | None = None) -> CrawlSummary:
         cfg = self.cfg
         t0 = time.monotonic()
@@ -914,11 +1027,9 @@ class CrawlEngine:
         else:
             self._init_state()
         pool = ThreadPoolExecutor(max_workers=4)
-        # every DataFrame persisted inside the try lands here; the finally
-        # unpersists whatever an exception left behind (unpersisting an
-        # already-unpersisted frame is a no-op, so the success path's own
-        # targeted unpersists stay where they are)
-        run_caches: list[DataFrame] = []
+        # the one run-long cache (web-scale robots formulation); the
+        # finally releases it whether the run returns or raises
+        robots_join_dim = None
         try:
             # robots sizing and the seen-filter build are independent Spark
             # jobs — overlap them (setup fixed cost = max, not sum). ONE job
@@ -975,7 +1086,6 @@ class CrawlEngine:
                     )
             summary = CrawlSummary()
             robots_filter = None
-            robots_join_dim = None
             if robots_head_f is not None:
                 # size-thresholded formulation choice: collect-into-closure is
                 # one pickle and zero per-batch joins, but only while the dim
@@ -989,7 +1099,6 @@ class CrawlEngine:
                     robots_filter = make_robots_filter_udf(rules)
                 else:
                     robots_join_dim = robots_dim.persist()
-                    run_caches.append(robots_join_dim)
             batches_run = 0
 
             phase = summary.extra.setdefault("phase_s", {})
@@ -1157,139 +1266,10 @@ class CrawlEngine:
                     attempts_t.last_dir
                 )
 
-                # --- discover + admit: reads ONLY (depth, parent_rank, links)
-                # from the just-written delta (column pruning skips spans) ---
-                dedup = self._discover(
-                    delta.filter("is_doc").select(
-                        "depth", "parent_rank", "links", "attempted_in_batch"
-                    ),
-                    robots_filter,
-                    robots_join_dim,
+                n_cand, n_admit, n_tpl_dropped = self._admit(
+                    delta, live_count - n_batch, robots_filter, robots_join_dim
                 )
-                self._resolve_bloom()
-                probed = None
-                if self._bloom is not None:
-                    from inform_spark.operators.bloom import bloom_partition
-
-                    # persist the probed candidates BEFORE branching: the
-                    # maybe/fresh filters and the final union would otherwise
-                    # re-execute the whole discover pipeline (explode + robots
-                    # UDF + dedup shuffle + bloom probe) once per branch.
-                    maybe_seen, fresh, probed = bloom_partition(
-                        dedup, self._bloom, persist=True
-                    )
-                    if probed is not None:
-                        run_caches.append(probed)
-                    checked = maybe_seen.join(
-                        self._net_frontier(frontier_t.read(cached=True))
-                        .select("url"),
-                        "url", "left_anti",
-                    )
-                    new_links = fresh.unionByName(checked)
-                else:
-                    new_links = dedup.join(
-                        self._net_frontier(frontier_t.read(cached=True))
-                        .select("url"),
-                        "url", "left_anti",
-                    )
-
-                # structural trap cap: at most template_cap new urls per
-                # (host, path template) this batch, keeping the FIFO prefix.
-                # The per-(host,template) window sorts exactly the rows the
-                # cap exists to drop — bounded by this batch's candidates.
-                n_tpl_dropped = 0
-                if cfg.template_cap is not None:
-                    from inform_spark.operators.traps import url_template_from_path
-
-                    new_links = new_links.persist()
-                    run_caches.append(new_links)
-                    n_pre_tpl = new_links.count()
-                    if probed is not None:
-                        probed.unpersist()
-                        probed = None
-                    tpl_w = Window.partitionBy(
-                        "host", url_template_from_path(F.col("path"))
-                    ).orderBy("frontier_offset")
-                    capped_links = (
-                        new_links.withColumn("__tr", F.row_number().over(tpl_w))
-                        .filter(F.col("__tr") <= cfg.template_cap)
-                        .drop("__tr")
-                        .persist()
-                    )
-                    run_caches.append(capped_links)
-                    n_tpl_dropped = n_pre_tpl - capped_links.count()
-                    new_links.unpersist()
-                    new_links = capped_links
-
-                # O3 queue cap (drop-new, reference src/WebCrawler.js:553-560).
-                # NOTE deliberately NOT an Observation: AQE's empty-relation
-                # propagation can elide CollectMetrics nodes when the candidate
-                # set is empty, wedging Observation.get. Counts come from the
-                # written delta's parquet footers (driver-side metadata, no job).
-                # discovered_in_batch already rides the candidate rows (column
-                # arithmetic on attempted_in_batch in _discover) — no
-                # batch-varying literal here
-                frontier_cols = [
-                    "url",
-                    "host",
-                    "path",
-                    "depth",
-                    "priority",
-                    "frontier_offset",
-                    "discovered_in_batch",
-                ]
-                capped = cfg.max_queue_size is not None
-                if capped:
-                    # cap path: materialize candidates once to count, then admit
-                    # the FIFO prefix that fits
-                    new_links = new_links.persist()
-                    run_caches.append(new_links)
-                    n_cand = new_links.count()
-                    if probed is not None:
-                        probed.unpersist()
-                    t_ph = _mark("writes_discover", t_ph)
-                    capacity = max(cfg.max_queue_size - (live_count - n_batch), 0)
-                    if n_cand > capacity:
-                        admitted = new_links.orderBy("frontier_offset").limit(capacity)
-                        n_admit = capacity
-                        if not self.queue_warned:
-                            self.queue_warned = True
-                            # reference warns once when the queue cap first
-                            # binds (src/WebCrawler.js:553-560)
-                            logger.warning(
-                                "frontier queue cap %s reached in batch %s: "
-                                "%s candidate links dropped (lowest "
-                                "frontier_offset admitted first)",
-                                cfg.max_queue_size, self.batch_id,
-                                n_cand - capacity,
-                            )
-                    else:
-                        admitted = new_links
-                        n_admit = n_cand
-                    # job 4: frontier append (candidates already materialized)
-                    frontier_t.append(
-                        admitted.select(*frontier_cols),
-                        f"b{self.batch_id}", n_files=1, shuffle=False,
-                    )
-                    new_links.unpersist()
-                else:
-                    # uncapped: the append IS the one materialization of the
-                    # discover pipeline (no separate count job); counts read
-                    # back from the delta's footers. coalesce (not repartition):
-                    # the in-batch dedup groupBy upstream is already a shuffle
-                    # boundary, so coalescing only narrows the trivial
-                    # post-shuffle tail (probe/anti-join/union over ~thousands
-                    # of candidate rows) instead of paying one more exchange.
-                    frontier_t.append(
-                        new_links.select(*frontier_cols),
-                        f"b{self.batch_id}", n_files=1, shuffle=False,
-                    )
-                    if probed is not None:
-                        probed.unpersist()
-                    if cfg.template_cap is not None:
-                        new_links.unpersist()
-                    n_cand = n_admit = frontier_t.last_dir_row_count()
-                    t_ph = _mark("writes_discover", t_ph)
+                t_ph = _mark("writes_discover", t_ph)
 
                 n_disc = agg["n_disc"]
                 lineage_row = (
@@ -1358,13 +1338,6 @@ class CrawlEngine:
                 summary.links_admitted += n_admit
                 summary.links_dropped_cap += n_cand - n_admit
                 summary.links_dropped_template += n_tpl_dropped
-
-                # this batch's caches are all released — drop their refs so
-                # a million-batch crawl does not accumulate plan objects;
-                # only the long-lived robots dim still needs finally-cover
-                run_caches.clear()
-                if robots_join_dim is not None:
-                    run_caches.append(robots_join_dim)
                 t_ph = _mark("commit", t_ph)
 
                 if (
@@ -1390,22 +1363,16 @@ class CrawlEngine:
             t_fin = time.monotonic()
             self._resolve_bloom()
             pool.shutdown()
-            if robots_join_dim is not None:
-                robots_join_dim.unpersist()
             phase["final"] = round(time.monotonic() - t_fin, 3)
             summary.wall_ms = (time.monotonic() - t0) * 1000
             return summary
         finally:
-            # a setup/batch exception must not leak the pool, an
-            # in-flight never-awaited future, or any cache persisted this
-            # run (idempotent after the success path's own shutdown and
-            # targeted unpersists above)
+            # a setup/batch exception must not leak the pool or an
+            # in-flight never-awaited future (idempotent after the success
+            # path's own shutdown above)
             pool.shutdown(wait=False, cancel_futures=True)
-            for df in run_caches:
-                try:
-                    df.unpersist()
-                except Exception:
-                    pass
+            if robots_join_dim is not None:
+                robots_join_dim.unpersist()
 
     # ------------------------------------------------------------------
     def _net_attempts(self) -> DataFrame:

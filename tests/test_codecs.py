@@ -700,6 +700,19 @@ def test_gif_interlaced_row_order():
         assert (got[display_row] == want).all(), (stored_idx, display_row)
 
 
+def test_gif_frame_past_logical_screen_is_clipped():
+    """A 4x1 frame on a 2x1 logical screen decodes to the screen's size,
+    keeping the frame's first 2 pixels."""
+    wtr = _LsbWriter()
+    for c, w in ((4, 3), (0, 3), (1, 3), (0, 3), (1, 4), (5, 4)):
+        wtr.code(c, w)
+    gif = bytearray(_gif(4, 1, [(0, 0, 0), (255, 255, 255)], 2, wtr.tobytes()))
+    gif[6:8] = _struct.pack("<H", 2)  # logical screen width 4 -> 2
+    got = codecs.decode_gif(bytes(gif))
+    assert got.shape == (1, 2, 3)
+    assert got[0].tolist() == [[0, 0, 0], [255, 255, 255]]
+
+
 def test_gif_not_a_gif_rejected():
     from inform_spark.operators import codecs
     import pytest

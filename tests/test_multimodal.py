@@ -51,6 +51,46 @@ def test_decode_error_row_not_exception(spark):
     assert rows[0]["width"] is None
 
 
+def test_phash_exact_beside_an_error_row(spark):
+    """One Arrow batch holding 3 PNGs and 1 undecodable row: every good
+    row's 63-bit phash equals its value decoded alone (an int column
+    with a null must not pass through float64)."""
+    import numpy as np
+    import pandas as pd
+
+    from inform_spark.operators import codecs
+
+    rng = np.random.default_rng(7)
+    pngs = [
+        codecs.encode_png(rng.integers(0, 256, (16, 16, 3), dtype=np.uint8))
+        for _ in range(3)
+    ]
+    alone = {
+        f"{i}.png": mm.decode_image(png, f"{i}.png")[0]["phash"]
+        for i, png in enumerate(pngs)
+    }
+    # the check only bites on hashes that float64 cannot hold exactly
+    assert any(int(float(p)) != p for p in alone.values())
+    content = pngs + [codecs.PNG_SIG + b"garbage"]
+    media = spark.createDataFrame(
+        pd.DataFrame({
+            "media_ref": [f"{i}.png" for i in range(4)],
+            "doc_id": ["1"] * 4,
+            "kind": ["image"] * 4,
+            "content": content,
+            "content_len": [len(c) for c in content],
+            "format": ["png"] * 4,
+        }),
+        schema=mm.MEDIA,
+    )
+    got = {
+        r["media_ref"]: r
+        for r in mm.image_features(media, partitions=1).collect()
+    }
+    assert got["3.png"]["decode_ok"] == "error"
+    assert {k: got[k]["phash"] for k in alone} == alone
+
+
 def test_resize_caps_length(media):
     out = mm.resize_stub(media, max_px=4).collect()
     assert all(r["content_len"] <= 16 for r in out)

@@ -81,3 +81,19 @@ def test_engine_template_cap_bounds_trap(spark, tmp_path):
     assert about in seen and seed in seen
     # non-trap pages all crawled; totals add up (1 seed + 1 about + 3 trap)
     assert len(seen) == 5
+
+    # both caps bind in the seed's batch: the template cap first cuts the
+    # 13 candidates to about + trap 1-3, then the queue cap admits the
+    # FIFO prefix of 2 that fits
+    eng = CrawlEngine(
+        spark,
+        pages_df,
+        robots_df,
+        CrawlConfig(seeds=[seed], limit=100, template_cap=3, max_queue_size=2),
+        checkpoint_dir=str(tmp_path / "both"),
+    )
+    s = eng.run()
+    assert (s.links_dropped_template, s.links_dropped_cap) == (9, 2)
+    assert {r["url"] for r in eng.seen().collect()} == {
+        seed, about, trap_urls[0]
+    }
