@@ -193,11 +193,20 @@ def _map_rows(media: DataFrame, partitions: int | None, schema: StructType,
     skew before the CPU-heavy decode), then ``mapInPandas`` over Arrow
     batches, so the binary column never leaves the executor.
     ``row(content, media_ref)`` returns ``(features, status)``; ANY
-    exception it raises becomes NULL features and status ``'error'`` —
-    untrusted bytes yield a verdict, never a failed task. ``schema`` is
+    exception it raises, and any int feature that overflows its column,
+    becomes NULL features and status ``'error'`` — untrusted bytes yield
+    a verdict, never a failed task. ``schema`` is
     (media_ref, doc_id, *feature columns, status)."""
     n = partitions or media.sparkSession.sparkContext.defaultParallelism
     features = schema.names[2:-1]
+    # Arrow builds an int column from the Python values and fails the
+    # task on one that does not fit it (a crafted 2^31 Hz WAV, a 64-bit
+    # mp4 duration): such a value makes its row an error instead
+    int_bits = {
+        f.name: 31 if isinstance(f.dataType, IntegerType) else 63
+        for f in schema.fields[2:-1]
+        if isinstance(f.dataType, (IntegerType, LongType))
+    }
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -209,6 +218,10 @@ def _map_rows(media: DataFrame, partitions: int | None, schema: StructType,
                     f, status = row(
                         bytes(content) if content is not None else None, ref
                     )
+                    for c, b in int_bits.items():
+                        v = f.get(c)
+                        if v is not None and not -(1 << b) <= v < 1 << b:
+                            raise OverflowError(f"{c}={v} overflows int{b + 1}")
                 except Exception:
                     f, status = {}, "error"
                 rows.append([ref, doc, *(f.get(c) for c in features), status])

@@ -31,8 +31,8 @@ Per batch:
 7. admit          = the candidates are written ONCE as the batch's
                     frontier delta and counted from its parquet footers;
                     only a cap that applies (template cap, O3 drop-new
-                    queue cap) un-stages it and rewrites the capped rows
-                    from that directory
+                    queue cap) un-stages it, rewrites the capped rows
+                    from that directory, then deletes it
 8. append lineage, atomic catalog commit (T6)
 
 Ordering guarantee: `frontier_offset` is a monotonic BIGINT encoding
@@ -60,6 +60,7 @@ from __future__ import annotations
 
 import logging
 import os
+import shutil
 import tempfile
 import time
 from concurrent.futures import ThreadPoolExecutor
@@ -921,13 +922,15 @@ class CrawlEngine:
         and counted from its parquet footers (no cache, no count job; not
         an Observation either: AQE can elide its CollectMetrics node on
         an empty candidate set, wedging ``Observation.get``).
-        Only a cap that applies rewrites it: the delta is un-staged and
-        the capped rows are read back from the superseded directory — an
-        orphan no commit pins, which resume ignores and ``vacuum``
-        removes. The template cap runs whenever it is set, then the O3
-        drop-new queue cap (reference src/WebCrawler.js:553-560) when the
-        candidates outgrow ``max_queue_size - live_left``; both keep the
-        lowest frontier_offsets.
+        Only a cap that applies rewrites it: the delta is un-staged, the
+        capped rows are read back from the superseded directory, and that
+        directory is deleted once the rewrite is written (no commit or
+        manifest pins it; a crash before the delete leaves an orphan that
+        resume ignores and ``vacuum`` removes). The template cap runs
+        whenever it is set, then the O3 drop-new queue cap (reference
+        src/WebCrawler.js:553-560) when the candidates outgrow
+        ``max_queue_size - live_left``; both keep the lowest
+        frontier_offsets.
 
         Returns ``(n_cand, n_admit, n_tpl_dropped)``; ``n_cand`` counts
         the candidates that reach the queue cap, so ``n_cand - n_admit``
@@ -977,11 +980,11 @@ class CrawlEngine:
         n_cand = frontier_t.last_dir_row_count()
 
         def rewrite(cap) -> int:
-            src = self.spark.read.schema(schemas.FRONTIER).parquet(
-                frontier_t.last_dir
-            )
+            old = frontier_t.last_dir
+            src = self.spark.read.schema(schemas.FRONTIER).parquet(old)
             frontier_t.load_version(frontier_t.version - 1)
             frontier_t.append(cap(src), label, n_files=1, shuffle=False)
+            shutil.rmtree(old, ignore_errors=True)
             return frontier_t.last_dir_row_count()
 
         n_tpl_dropped = 0

@@ -217,12 +217,18 @@ def test_audio_features_real_wav(spark):
     body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
     body += b"data" + struct.pack("<I", len(data)) + data
     wav = b"RIFF" + struct.pack("<I", len(body)) + body
+    # a uint32 rate that decodes but does not fit the int32 column: an
+    # 'error' verdict, not a failed task
+    huge = wav.replace(fmt, struct.pack("<HHIIHH", 1, 1, 2**31, 0, 2, 16))
+    assert codecs.decode_wav(huge)["sample_rate"] == 2**31
     media = spark.createDataFrame(
         pd.DataFrame({
-            "media_ref": ["s.wav", "x.mp3"], "doc_id": ["1", "2"],
-            "kind": ["audio", "audio"],
-            "content": [wav, b"ID3notdecodable"],
-            "content_len": [len(wav), 15], "format": ["wav", "mp3"],
+            "media_ref": ["s.wav", "x.mp3", "huge.wav"],
+            "doc_id": ["1", "2", "3"],
+            "kind": ["audio"] * 3,
+            "content": [wav, b"ID3notdecodable", huge],
+            "content_len": [len(wav), 15, len(huge)],
+            "format": ["wav", "mp3", "wav"],
         }),
         schema=mm.MEDIA,
     )
@@ -234,6 +240,8 @@ def test_audio_features_real_wav(spark):
     assert abs(got["s.wav"]["rms"] - expected_rms) < 0.01
     assert got["x.mp3"]["decode_ok"] == "error"
     assert got["x.mp3"]["sample_rate"] is None
+    assert got["huge.wav"]["decode_ok"] == "error"
+    assert got["huge.wav"]["sample_rate"] is None
 
 
 # ---------------------------------------------------------------------------

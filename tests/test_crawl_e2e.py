@@ -243,8 +243,9 @@ def test_crawl_resume_mid_crawl(spark, site, site_dfs, tmp_path):
 def test_queue_cap_bloom_resume_after_vacuum(spark, site_dfs, tmp_path):
     """Queue cap + bloom filter + kill/vacuum/resume: the cap rewrites a
     batch's frontier delta, the bloom fold-in reads the rewritten one,
-    and vacuum deletes the superseded directory. Seen set, crawl order
-    and per-batch cap drops equal an uninterrupted run."""
+    and the superseded directory is already gone (vacuum finds no
+    frontier orphan). Seen set, crawl order and per-batch cap drops
+    equal an uninterrupted run."""
     cfg = CrawlConfig(
         seeds=["https://site0.test/"], limit=30, batch_size=5,
         max_queue_size=3, use_bloom=True,
@@ -268,10 +269,10 @@ def test_queue_cap_bloom_resume_after_vacuum(spark, site_dfs, tmp_path):
     ck = str(tmp_path / "resumed")
     eng1 = CrawlEngine(spark, *site_dfs, cfg, checkpoint_dir=ck)
     eng1.run(max_batches=2)
-    # each batch whose cap bound left one superseded frontier delta
-    rewrites = sum(1 for d in want[2][:2] if d > 0)
-    assert rewrites >= 1
-    assert eng1.catalog.vacuum()["frontier"] == rewrites
+    # the cap bound in one of the first two batches, and each rewrite
+    # deleted the delta it superseded
+    assert any(d > 0 for d in want[2][:2])
+    assert eng1.catalog.vacuum()["frontier"] == 0
 
     eng2 = CrawlEngine(spark, *site_dfs, cfg, checkpoint_dir=ck)
     eng2.run(resume=True)
