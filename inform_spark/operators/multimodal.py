@@ -531,7 +531,10 @@ def phash_incremental(
     Scale: every join runs at the DISTINCT-phash level (identical
     copies pre-collapse — the hot-logo delta costs one probe row);
     the index side is only its band store; new-vs-new resolution is
-    connected components over the (small) surviving hash pair graph.
+    connected components over the surviving hash pair graph, which for
+    a micro-batch is small enough (at most
+    ``components.LOCAL_MAX_EDGES`` edges) to be labelled on the driver
+    after one bounded collect, not in a Spark job per propagation round.
     Survivor-only transitivity, as documented on minhash_incremental:
     a new image whose only link to an indexed family passes through a
     removed duplicate is 'kept' — batching-invariant, because removed

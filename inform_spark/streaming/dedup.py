@@ -10,7 +10,9 @@ of (doc_id, text) — file source, Kafka, or the crawl engine's documents.
 In-batch duplicates resolve exactly like the batch operator (connected
 components, min doc_id survives); across batches first arrival wins,
 like the crawl engine's seen-set. A single batch is byte-identical to
-the batch operator.
+the batch operator. A micro-batch's survivor pair graph is small (a few
+dozen nodes), so ``connected_components`` labels it on the driver after
+one bounded collect instead of running a Spark job per propagation round.
 
 Replay safety is the shared kernel's (``streaming.microbatch``): a
 replay reproduces identical verdicts and appends nothing twice, and a
