@@ -357,7 +357,11 @@ def _phash_rep_pairs(feats: DataFrame, hamming_max: int) -> DataFrame:
     bounded by distinct-hash diversity per 16-bit band value (not by
     image multiplicity — identical copies collapsed upstream); a
     residual adversarial bucket (millions of DISTINCT phashes sharing
-    one band) is an AQE skew-split hash join, never a cross join."""
+    one band) is an AQE skew-split hash join, never a cross join.
+
+    Recall is complete only for ``hamming_max <= 3`` (the public
+    defaults): a pair 4 bits apart can differ in all four bands and
+    never become a candidate."""
     reps = feats.select("phash").distinct()
     bands = _phash_band_keys(reps)
     l, r = bands.alias("l"), bands.alias("r")
@@ -376,7 +380,7 @@ def _phash_rep_pairs(feats: DataFrame, hamming_max: int) -> DataFrame:
     )
 
 
-def near_dup_by_phash(features: DataFrame, hamming_max: int = 4) -> DataFrame:
+def near_dup_by_phash(features: DataFrame, hamming_max: int = 3) -> DataFrame:
     """Exact near-duplicate image pairs (a, b, hamming) by perceptual
     hash, a < b: identical phashes pre-collapse to one representative
     BEFORE the band join (:func:`_phash_rep_pairs`), then member pairs
@@ -423,7 +427,7 @@ def near_dup_by_phash(features: DataFrame, hamming_max: int = 4) -> DataFrame:
     return cross.unionByName(intra)
 
 
-def phash_neardup_stars(features: DataFrame, hamming_max: int = 4) -> DataFrame:
+def phash_neardup_stars(features: DataFrame, hamming_max: int = 3) -> DataFrame:
     """Star edges (a, b) whose connected components are IDENTICAL to
     :func:`near_dup_by_phash`'s pair graph — the scale-safe form for
     clustering consumers (components/minhash_clusters semantics, same
@@ -463,7 +467,7 @@ def phash_neardup_stars(features: DataFrame, hamming_max: int = 4) -> DataFrame:
 
 
 def near_dup_by_phash_capped(
-    features: DataFrame, hamming_max: int = 4, max_group: int = 64
+    features: DataFrame, hamming_max: int = 3, max_group: int = 64
 ) -> tuple[DataFrame, DataFrame]:
     """Exact pair expansion with each identical-phash group capped at
     its first ``max_group`` members (ranked by media_ref —
@@ -515,7 +519,7 @@ def phash_incremental(
     new_feats: DataFrame,
     index_feats: DataFrame | None = None,
     index_bands: DataFrame | None = None,
-    hamming_max: int = 4,
+    hamming_max: int = 3,
 ) -> DataFrame:
     """Incremental image near-dup: judge a NEW batch of images against
     an EXISTING corpus index without touching the corpus — the

@@ -83,10 +83,13 @@ from inform_spark.functions.urls import (
 )
 from inform_spark.operators.render import make_extract_render_udf
 from inform_spark.plans.checkpoint import CrawlCheckpoint
+from inform_spark.sources.httpfetch import (
+    DEFAULT_MAX_BYTES,
+    DEFAULT_UA,
+    RETRYABLE,
+)
 
 logger = logging.getLogger(__name__)
-
-RETRYABLE_SQL = (429, 500, 502, 503, 504)
 
 # frontier_offset bit layout: (batch+1) << 42 | parent_rank << 21 | link_idx
 BATCH_SHIFT = 42
@@ -137,8 +140,8 @@ class CrawlConfig:
     http_timeout_s: float = 10.0
     http_base_backoff_s: float = 1.0
     http_min_interval_ms: int = 0
-    http_max_bytes: int = 16 * 1024 * 1024  # hard body cap; over -> 'truncated'
-    http_user_agent: str = "Inform/1.0 (inform-spark)"
+    http_max_bytes: int = DEFAULT_MAX_BYTES  # hard body cap; over -> 'truncated'
+    http_user_agent: str = DEFAULT_UA
     # distributed seeding (recrawl / bulk re-queue): a DataFrame with a
     # `url` column (optional int `priority`), e.g. recrawl.due_now()
     # output. Normalized + deduped DISTRIBUTED, FIFO order = sorted url
@@ -727,7 +730,7 @@ class CrawlEngine:
         attempts = (
             F.when((needed > 0) & (needed <= max_r), needed + 1)
             .when(needed > max_r, max_r + 1)
-            .when(F.col("status_code").isin(*RETRYABLE_SQL), max_r + 1)
+            .when(F.col("status_code").isin(*sorted(RETRYABLE)), max_r + 1)
             .otherwise(1)
             .cast("int")
         )

@@ -29,7 +29,7 @@ import json
 import re
 import xml.etree.ElementTree as ET
 from collections.abc import Iterator
-from dataclasses import dataclass, field
+from functools import partial
 from urllib.parse import quote, urlsplit
 
 import pandas as pd
@@ -47,6 +47,7 @@ from inform_spark.functions.text import (
     slugify,
     to_iso_date,
 )
+from inform_spark.sources.httpfetch import DEFAULT_MAX_BYTES, DEFAULT_UA, http_get
 
 # D7 IngestItem (reference src/sources/types.js:10-22), explicit schema
 ITEM = StructType(
@@ -798,12 +799,30 @@ _CHANNEL_ID_PATTERNS = [
 ]
 
 
+def _get_text(url: str, user_agent: str, timeout_s: float, max_bytes: int,
+              headers: dict | None = None) -> tuple[int, str | None]:
+    """(status, body text) for one GET through
+    :func:`~inform_spark.sources.httpfetch.http_get`, reading the body
+    whatever its Content-Type. A network error reads as ``(0, None)``; a
+    body over ``max_bytes`` raises, so a clipped feed, payload or page is
+    never parsed as a whole one."""
+    try:
+        status, _, body, truncated, _, _ = http_get(
+            url, user_agent, timeout_s, max_bytes, headers=headers,
+            force_body=True,
+        )
+    except Exception:
+        return 0, None
+    if truncated:
+        raise ValueError(f"body over {max_bytes} bytes: {url}")
+    return status, None if body is None else body.decode("utf-8", "replace")
+
+
 def make_page_scrape_resolver(user_agent: str, timeout_s: float,
                               base_override: str | None = None):
     """Handle/user/custom YouTube URL -> channel id by scraping the page
     (reference resolveHandleToChannelId, src/sources/youtube.js:113-150).
     ``base_override`` rewrites the scheme+host for loopback tests."""
-    from inform_spark.sources.httpfetch import fetch_url_once
 
     def resolve(page_url: str) -> str:
         url = normalize_feed_url(page_url)
@@ -812,7 +831,7 @@ def make_page_scrape_resolver(user_agent: str, timeout_s: float,
             url = base_override.rstrip("/") + (u.path or "/") + (
                 "?" + u.query if u.query else ""
             )
-        status, _, body = fetch_url_once(url, user_agent, timeout_s, 4 << 20)
+        status, body = _get_text(url, user_agent, timeout_s, 4 << 20)
         if status != 200 or not body:
             raise ValueError(f"Failed to fetch YouTube page ({status}): {page_url}")
         for pat in _CHANNEL_ID_PATTERNS:
@@ -845,10 +864,11 @@ def fetch_feed_bodies(feeds_df: DataFrame, options: dict | None = None) -> DataF
                API v2 user-lookup + tweets with one       (:64-110)
 
     Failures become rows with ``error`` set and a null body; ingest_feeds
-    turns those into kind='error' items. ``feed_url`` carries the
-    handle/username for social kinds (what parse_payload expects)."""
+    turns those into kind='error' items; a body over
+    ``httpfetch.DEFAULT_MAX_BYTES`` is such a failure. ``feed_url`` carries
+    the handle/username for social kinds (what parse_payload expects)."""
     opts = options or {}
-    user_agent = opts.get("user_agent", "Inform/1.0 (inform-spark)")
+    user_agent = opts.get("user_agent", DEFAULT_UA)
     timeout_s = float(opts.get("timeout_s", 10.0))
     # feed default is 50 (reference FeedCrawler.js:39 / x.js:66). When the
     # config layer marked provenance, DEFAULTS' web-crawler 100 does NOT
@@ -866,24 +886,8 @@ def fetch_feed_bodies(feeds_df: DataFrame, options: dict | None = None) -> DataF
     yt_feed_base = opts.get("yt_feed_base")  # loopback override
 
     def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from inform_spark.sources.httpfetch import fetch_url_once
-
-        def get(url: str, headers: dict | None = None) -> tuple[int, str | None]:
-            # fetch_url_once has no custom-header path; tiny local variant
-            import urllib.error
-            import urllib.request
-
-            req = urllib.request.Request(
-                url, headers={"User-Agent": user_agent, **(headers or {})}
-            )
-            try:
-                with urllib.request.urlopen(req, timeout=timeout_s) as resp:
-                    return resp.status, resp.read().decode("utf-8", "replace")
-            except urllib.error.HTTPError as e:
-                return e.code, None
-            except Exception:
-                return 0, None
-
+        get = partial(_get_text, user_agent=user_agent, timeout_s=timeout_s,
+                      max_bytes=DEFAULT_MAX_BYTES)
         resolver = make_page_scrape_resolver(
             user_agent, timeout_s, base_override=yt_resolver_base
         )
@@ -946,7 +950,7 @@ def fetch_feed_bodies(feeds_df: DataFrame, options: dict | None = None) -> DataF
                                    "Accept": "application/json"}
                         status, body = get(
                             f"{x_api}/2/users/by/username/{quote(username, safe='')}",
-                            headers,
+                            headers=headers,
                         )
                         if status != 200 or body is None:
                             raise ValueError(
@@ -959,7 +963,7 @@ def fetch_feed_bodies(feeds_df: DataFrame, options: dict | None = None) -> DataF
                             f"{x_api}/2/users/{quote(str(user_id), safe='')}/tweets"
                             f"?max_results={limit}"
                             "&tweet.fields=created_at,public_metrics",
-                            headers,
+                            headers=headers,
                         )
                         if status != 200 or body is None:
                             raise ValueError(f"X tweets fetch failed ({status})")
@@ -1067,11 +1071,9 @@ def fetch_youtube_transcript(
     """Best-effort transcript: scrape the watch page for a caption baseUrl,
     else the plain timedtext endpoint (youtube.js:180-276). Pluggable bases
     keep tests loopback-only."""
-    from inform_spark.sources.httpfetch import fetch_url_once
-
     caption_url = None
     try:
-        status, _, page = fetch_url_once(
+        status, page = _get_text(
             f"{watch_base}/watch?v={quote(video_id, safe='')}",
             user_agent, timeout_s, 8 << 20,
         )
@@ -1090,7 +1092,7 @@ def fetch_youtube_transcript(
             f"&v={quote(video_id, safe='')}"
         )
     try:
-        status, _, xml = fetch_url_once(caption_url, user_agent, timeout_s, 8 << 20)
+        status, xml = _get_text(caption_url, user_agent, timeout_s, 8 << 20)
     except Exception:
         return None
     if status != 200 or not xml or not xml.strip():
@@ -1109,7 +1111,7 @@ def enrich_youtube_transcripts(
     instead of the reference's sequential loop."""
     opts = options or {}
     lang = opts.get("yt_lang", "en")
-    user_agent = opts.get("user_agent", "Inform/1.0 (inform-spark)")
+    user_agent = opts.get("user_agent", DEFAULT_UA)
     timeout_s = float(opts.get("timeout_s", 10.0))
     watch_base = opts.get("yt_page_base") or "https://www.youtube.com"
     timedtext_base = opts.get("yt_timedtext_base")

@@ -6,7 +6,10 @@ round of :class:`~inform_spark.plans.gitcrawl.GitCrawlEngine` hands the
 whole directory level to a ``mapInPandas`` fetcher, so an org-scale mirror
 lists a level of a million directories with full executor parallelism while
 per-worker min-interval pacing still bounds the request rate against the
-API host (A3/T4 semantics, src/GitCrawler.js:147-157).
+API host (A3/T4 semantics, src/GitCrawler.js:147-157). Requests, retries and
+pacing go through :func:`~inform_spark.sources.httpfetch.paced_get`; a
+listing or download body over its byte cap is a failure, never a clipped
+parse or a clipped file.
 
 Auth: ``token`` becomes the reference's Authorization header
 (src/GitCrawler.js:40-43, ``GITHUB_TOKEN``). ``api_base`` is pluggable so
@@ -22,7 +25,6 @@ inline-vs-download branch, src/GitCrawler.js:298-325).
 from __future__ import annotations
 
 import json
-import time
 from collections.abc import Iterator
 
 import pandas as pd
@@ -35,7 +37,7 @@ from pyspark.sql.types import (
 )
 
 from inform_spark.functions.giturl import GitRepoInfo, github_api_url
-from inform_spark.sources.httpfetch import RETRYABLE
+from inform_spark.sources.httpfetch import DEFAULT_MAX_BYTES, DEFAULT_UA, paced_get
 
 LISTING_SCHEMA = StructType(
     [
@@ -50,61 +52,19 @@ LISTING_SCHEMA = StructType(
 )
 
 
-def _github_headers(token: str | None, user_agent: str) -> dict[str, str]:
-    """Reference getGitHubHeaders (src/GitCrawler.js:55-66)."""
-    headers = {
-        "User-Agent": user_agent,
-        "Accept": "application/vnd.github.v3+json",
-    }
+def _github_headers(token: str | None) -> dict[str, str]:
+    """Reference getGitHubHeaders (src/GitCrawler.js:55-66); the
+    User-Agent is added by :func:`~inform_spark.sources.httpfetch.http_get`."""
+    headers = {"Accept": "application/vnd.github.v3+json"}
     if token:
         headers["Authorization"] = f"token {token}"
     return headers
 
 
-def _get_with_retry(
-    url: str,
-    headers: dict[str, str],
-    timeout_s: float,
-    max_retries: int,
-    base_backoff_s: float,
-    pacing: dict[str, float],
-    min_interval_ms: int,
-) -> tuple[int, bytes | None]:
-    """(status, body) with the reference's retry/backoff + min-interval
-    pacing (src/GitCrawler.js:144-193). Status 0 = network error."""
-    import urllib.error
-    import urllib.request
-
-    from urllib.parse import urlsplit
-
-    host = urlsplit(url).netloc
-    for attempt in range(max_retries + 1):
-        if min_interval_ms > 0:
-            since = time.monotonic() - pacing.get(host, 0.0)
-            wait = min_interval_ms / 1000.0 - since
-            if wait > 0:
-                time.sleep(wait)
-        pacing[host] = time.monotonic()
-        status, body = 0, None
-        try:
-            req = urllib.request.Request(url, headers=headers)
-            with urllib.request.urlopen(req, timeout=timeout_s) as resp:
-                status, body = resp.status, resp.read()
-        except urllib.error.HTTPError as e:
-            status, body = e.code, None
-        except Exception:
-            status, body = 0, None
-        if status and status not in RETRYABLE:
-            return status, body
-        if attempt < max_retries:
-            time.sleep(base_backoff_s * (2 ** attempt))
-    return (status or 503), body
-
-
 def make_listing_fetcher(
     repo: GitRepoInfo,
     token: str | None = None,
-    user_agent: str = "Inform/1.0 (inform-spark)",
+    user_agent: str = DEFAULT_UA,
     timeout_s: float = 10.0,
     max_retries: int = 3,
     base_backoff_s: float = 1.0,
@@ -116,10 +76,11 @@ def make_listing_fetcher(
     engine surfaces it in the summary; reference throws and aborts,
     src/GitCrawler.js:236-241 — at fleet scale a poison dir must not kill
     the walk)."""
-    headers = _github_headers(token, user_agent)
+    headers = _github_headers(token)
 
     def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pacing: dict[str, float] = {}
+        get = paced_get(user_agent, timeout_s, DEFAULT_MAX_BYTES, max_retries,
+                        base_backoff_s, min_interval_ms, force_body=True)
         cols = [f.name for f in LISTING_SCHEMA.fields]
         for pdf in batches:
             rows: list[dict] = []
@@ -130,25 +91,25 @@ def make_listing_fetcher(
                 sub = repo.subdirectory
                 if sub and (rel == sub or rel.startswith(sub + "/")):
                     rel = rel[len(sub):].lstrip("/")
-                url = github_api_url(repo, rel)
-                status, body = _get_with_retry(
-                    url, headers, timeout_s, max_retries, base_backoff_s,
-                    pacing, min_interval_ms,
+                (status, _, body, truncated, _, _), _ = get(
+                    github_api_url(repo, rel), headers=headers
                 )
-                if status != 200 or body is None:
+                error = None
+                if status != 200:
+                    error = f"HTTP {status}"
+                elif truncated:
+                    # a clipped JSON array would parse as a partial listing
+                    error = f"listing over {DEFAULT_MAX_BYTES} bytes"
+                else:
+                    try:
+                        contents = json.loads(body.decode("utf-8", "replace"))
+                    except ValueError as e:
+                        error = f"bad JSON: {e}"
+                if error:
                     rows.append({
                         "parent": d, "name": "", "type": "error",
                         "size": None, "content": None, "download_url": None,
-                        "error": f"HTTP {status}",
-                    })
-                    continue
-                try:
-                    contents = json.loads(body.decode("utf-8", "replace"))
-                except ValueError as e:
-                    rows.append({
-                        "parent": d, "name": "", "type": "error",
-                        "size": None, "content": None, "download_url": None,
-                        "error": f"bad JSON: {e}",
+                        "error": error,
                     })
                     continue
                 # single-file response (src/GitCrawler.js:246-252)
@@ -175,7 +136,7 @@ def make_listing_fetcher(
 def fetch_download_urls(
     files_df: DataFrame,
     token: str | None = None,
-    user_agent: str = "Inform/1.0 (inform-spark)",
+    user_agent: str = DEFAULT_UA,
     timeout_s: float = 30.0,
     max_retries: int = 3,
     base_backoff_s: float = 1.0,
@@ -199,13 +160,12 @@ def fetch_download_urls(
     out_schema = StructType(
         list(FILES.fields) + [StructField("fetch_failed", BooleanType(), False)]
     )
-    headers = {"User-Agent": user_agent}
-    if token:
-        headers["Authorization"] = f"token {token}"
+    headers = {"Authorization": f"token {token}"} if token else {}
     cols = [f.name for f in FILES.fields]
 
     def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pacing: dict[str, float] = {}
+        get = paced_get(user_agent, timeout_s, max_bytes, max_retries,
+                        base_backoff_s, min_interval_ms, force_body=True)
         for pdf in batches:
             out = {c: [] for c in cols}
             out["fetch_failed"] = []
@@ -213,23 +173,20 @@ def fetch_download_urls(
                 text, data = row.text, row.data
                 failed = False
                 if not row.inline:
+                    # listed but not inlined and no download URL: nothing
+                    # fetchable — a failure, not an empty file; a body over
+                    # max_bytes is a failure, not a clipped file
+                    failed = True
                     if row.download_url:
-                        status, body = _get_with_retry(
-                            row.download_url, headers, timeout_s, max_retries,
-                            base_backoff_s, pacing, min_interval_ms,
+                        (status, _, body, truncated, _, _), _ = get(
+                            row.download_url, headers=headers
                         )
-                        if status == 200 and body is not None:
-                            body = body[:max_bytes]
-                            if row.is_binary:
-                                data = body
-                            else:
-                                text = body.decode("utf-8", "replace")
+                        failed = status != 200 or truncated
+                    if not failed:
+                        if row.is_binary:
+                            data = body
                         else:
-                            failed = True
-                    else:
-                        # listed but not inlined and no download URL:
-                        # nothing fetchable — a failure, not an empty file
-                        failed = True
+                            text = body.decode("utf-8", "replace")
                 for c in cols:
                     v = {"text": text, "data": data}.get(c, getattr(row, c))
                     out[c].append(v)

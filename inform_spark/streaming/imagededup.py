@@ -59,7 +59,7 @@ def init_index(spark: SparkSession, index_dir: str,
 
 @mb.micro_batch
 def process_batch(batch_df: DataFrame, batch_id: int, index_dir: str,
-                  verdicts_dir: str, hamming_max: int = 4) -> None:
+                  verdicts_dir: str, hamming_max: int = 3) -> None:
     """One micro-batch of the image-dedup loop — module-level so replay
     idempotence is directly testable."""
     from inform_spark.operators.multimodal import phash_band_index, phash_incremental
@@ -78,7 +78,7 @@ def process_batch(batch_df: DataFrame, batch_id: int, index_dir: str,
 
 
 def image_dedup_stream(stream: DataFrame, index_dir: str, verdicts_dir: str,
-                       checkpoint_dir: str, hamming_max: int = 4):
+                       checkpoint_dir: str, hamming_max: int = 3):
     """Run the continuous image-dedup loop on a streaming
     (media_ref, phash) DataFrame. Returns the StreamingQuery (caller
     awaits termination)."""

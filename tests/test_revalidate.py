@@ -8,7 +8,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 import pytest
 
 from inform_spark.sources.httpfetch import (
-    fetch_url_conditional,
+    http_get,
     merge_revalidated,
     revalidate_stage,
 )
@@ -82,15 +82,15 @@ def _origin(srv):
 
 
 def test_first_cycle_captures_validators(server):
-    st, ct, body, tr, etag, lm = fetch_url_conditional(
+    st, ct, body, tr, etag, lm = http_get(
         _origin(server) + "/doc", "ua", 5, 1 << 20
     )
-    assert st == 200 and "doc version 1" in body
+    assert st == 200 and b"doc version 1" in body
     assert etag == '"v1"' and lm == LM_V1
 
 
 def test_matching_etag_revalidates_to_304_with_no_body(server):
-    st, ct, body, tr, etag, lm = fetch_url_conditional(
+    st, ct, body, tr, etag, lm = http_get(
         _origin(server) + "/doc", "ua", 5, 1 << 20, etag='"v1"'
     )
     assert st == 304 and body is None
@@ -99,7 +99,7 @@ def test_matching_etag_revalidates_to_304_with_no_body(server):
 
 def test_if_none_match_takes_precedence_over_stale_date(server):
     # stale Last-Modified but CURRENT etag: RFC 9110 -> 304
-    st, _, body, _, _, _ = fetch_url_conditional(
+    st, _, body, _, _, _ = http_get(
         _origin(server) + "/doc", "ua", 5, 1 << 20,
         etag='"v1"', last_modified="Thu, 01 Jan 1970 00:00:00 GMT",
     )
@@ -108,19 +108,19 @@ def test_if_none_match_takes_precedence_over_stale_date(server):
 
 def test_changed_content_refetches(server):
     server.doc_version = 2
-    st, _, body, _, etag, lm = fetch_url_conditional(
+    st, _, body, _, etag, lm = http_get(
         _origin(server) + "/doc", "ua", 5, 1 << 20,
         etag='"v1"', last_modified=LM_V1,
     )
-    assert st == 200 and "doc version 2" in body
+    assert st == 200 and b"doc version 2" in body
     assert etag == '"v2"' and lm == LM_V2
 
 
 def test_validatorless_origin_degrades_to_plain_get(server):
-    st, _, body, _, etag, lm = fetch_url_conditional(
+    st, _, body, _, etag, lm = http_get(
         _origin(server) + "/plain", "ua", 5, 1 << 20, etag='"whatever"'
     )
-    assert st == 200 and "no validators" in body
+    assert st == 200 and b"no validators" in body
     assert etag is None and lm is None
 
 
