@@ -12,6 +12,12 @@ so this module implements the same commit semantics on plain parquet:
 - data written by a crashed batch is simply never referenced (orphans), so
   resume-from-checkpoint reads a consistent multi-table view — the same
   guarantee Iceberg snapshots give
+- ``append`` is ``write`` (data files into a fresh directory) + ``stage``
+  (the next manifest names it). A directory that was written but never
+  staged is an orphan until staged: no manifest names it, restore never
+  reads it and ``vacuum`` removes it. The crawl writes batch k+1's
+  attempts that way while batch k is still admitting, and stages it only
+  after batch k's commit
 
 Swapping in real Iceberg later is localized to this module: ``append``
 becomes ``writeTo(...).append()`` and the catalog commit becomes a
@@ -119,6 +125,33 @@ class SnapshotTable:
         return self._version
 
     # -- operations ----------------------------------------------------------
+    def write(
+        self,
+        df: DataFrame,
+        label: str,
+        n_files: int | None = None,
+        shuffle: bool = True,
+    ) -> str:
+        """Write df as new data files into a fresh directory and return it.
+        The directory is an orphan until :meth:`stage` names it in a
+        manifest. ``n_files`` right-sizes the output (micro-batches would
+        otherwise emit one near-empty file per shuffle partition).
+        ``shuffle=True`` repartitions (keeps an unmaterialized upstream at
+        full parallelism); ``shuffle=False`` coalesces — only safe when the
+        upstream is already cached, else it would collapse the compute
+        into n_files tasks. Touches no snapshot state, so it may run on
+        another thread while this table is read or appended to."""
+        out = os.path.join(self.data_dir, f"{label}-{uuid.uuid4().hex[:8]}")
+        if n_files is not None:
+            df = df.repartition(n_files) if shuffle else df.coalesce(n_files)
+        df.write.parquet(out, mode="overwrite")
+        return out
+
+    def stage(self, out: str) -> int:
+        """Stage snapshot version+1 = the current dirs + ``out``. Returns
+        the new (staged) version. Not visible until catalog commit."""
+        return self._stage(self._dirs + [out])
+
     def append(
         self,
         df: DataFrame,
@@ -126,18 +159,8 @@ class SnapshotTable:
         n_files: int | None = None,
         shuffle: bool = True,
     ) -> int:
-        """Write df as new data files and stage snapshot version+1.
-        Returns the new (staged) version. Not visible until catalog commit.
-        ``n_files`` right-sizes the output (micro-batches would otherwise
-        emit one near-empty file per shuffle partition). ``shuffle=True``
-        repartitions (keeps an unmaterialized upstream at full parallelism);
-        ``shuffle=False`` coalesces — only safe when the upstream is already
-        cached, else it would collapse the compute into n_files tasks."""
-        out = os.path.join(self.data_dir, f"{label}-{uuid.uuid4().hex[:8]}")
-        if n_files is not None:
-            df = df.repartition(n_files) if shuffle else df.coalesce(n_files)
-        df.write.parquet(out, mode="overwrite")
-        return self._stage(self._dirs + [out])
+        """:meth:`write` then :meth:`stage`; returns the staged version."""
+        return self.stage(self.write(df, label, n_files, shuffle))
 
     def append_rows(self, rows: list[tuple], label: str) -> int:
         """Driver-side append of a tiny row set (seed frontier, per-batch
@@ -158,7 +181,7 @@ class SnapshotTable:
             schema=arrow_schema,
         )
         pq.write_table(table, os.path.join(out, "part-00000.parquet"))
-        return self._stage(self._dirs + [out])
+        return self.stage(out)
 
     # -- Iceberg-shaped snapshot operations ---------------------------------
     def read_at(self, version: int) -> DataFrame:

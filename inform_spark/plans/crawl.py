@@ -35,6 +35,30 @@ Per batch:
                     from that directory, then deletes it
 8. append lineage, atomic catalog commit (T6)
 
+Pipelining: one ``launch`` plans a batch's select → rank over a live
+frontier read on the driver thread and submits the rest to the run's
+thread pool, in a Spark job group of its own: one local checkpoint of the
+ranked batch (the fetch reads it three times), then fetch → render →
+attempts write. The loop awaits it, stages the written directory and
+admits. In FIFO watermark mode every link batch k discovers gets offset
+prefix k+1, above every row already in the frontier, so once batch k's
+rows are known, batch k+1 is exactly the next ``b`` rows above batch k's
+highest offset whenever ``live - n_k >= b``: batch k's discover cannot
+change it.
+The loop then launches batch k+1 BEFORE admitting batch k, over a plain
+parquet read of the frontier dirs pinned at that moment (never the
+per-snapshot cache, which batch k's frontier append drops), so its
+fetch+render overlaps batch k's admission and commit. The gate also
+needs ``b > 0`` and the next batch inside ``max_batches``/``limit``;
+otherwise the next iteration launches it after the commit. Its
+directory is an orphan until batch k+1's own staging and commit publish
+it, so commits stay atomic and in batch order, and a crash in between
+leaves a directory that resume ignores and ``vacuum`` removes; on any
+exception ``run`` cancels the job group and waits the task out before
+it raises. Politeness-budget, ``priority_col`` and seed-priority runs
+select from the seen set or by priority, not by an offset prefix, so
+they never pass the gate and keep the serial order on the same path.
+
 Ordering guarantee: `frontier_offset` is a monotonic BIGINT encoding
 (batch+1, parent-rank-in-batch, link-index), so `ORDER BY frontier_offset`
 is exactly the reference's insertion-ordered FIFO (src/WebCrawler.js:55,
@@ -63,8 +87,12 @@ import os
 import shutil
 import tempfile
 import time
-from concurrent.futures import ThreadPoolExecutor
+import uuid
+from concurrent.futures import Future, ThreadPoolExecutor
+from concurrent.futures import wait as futures_wait
+from contextlib import contextmanager
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
@@ -196,6 +224,34 @@ class CrawlSummary:
     links_dropped_template: int = 0
     wall_ms: float = 0.0
     extra: dict = field(default_factory=dict)
+
+
+class _Launch(NamedTuple):
+    """A batch whose fetch+render write was submitted to the run's pool."""
+
+    future: Future  # -> the attempts directory it wrote, not staged yet
+    obs: Observation  # the batch metrics, filled in by that write
+    group: str  # Spark job group of the write's jobs
+
+
+_GROUP_PROPS = (
+    "spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"
+)
+
+
+@contextmanager
+def _job_group(sc, group: str, description: str):
+    """Run the block's Spark jobs in job group ``group`` (so
+    ``cancelJobGroup`` reaches them) under ``description``, on the calling
+    thread only. The thread's previous group and description come back
+    afterwards: a pool thread runs other tasks later."""
+    prev = [sc.getLocalProperty(k) for k in _GROUP_PROPS]
+    sc.setJobGroup(group, description)
+    try:
+        yield
+    finally:
+        for k, v in zip(_GROUP_PROPS, prev):
+            sc.setLocalProperty(k, v)
 
 
 def _glob_filter_udf(include, exclude):
@@ -574,6 +630,21 @@ class CrawlEngine:
         )
 
     # ------------------------------------------------------------------
+    def _batch_rows(self, attempted: int) -> int:
+        """Rows the next batch selects once ``attempted`` pages are done."""
+        remaining = self.cfg.limit - attempted
+        return min(self.cfg.batch_size or remaining, remaining, MAX_BATCH_ROWS)
+
+    def _fifo_live(self, watermark: int) -> DataFrame:
+        """FIFO watermark mode's live frontier: the frontier offsets above
+        ``watermark`` (no seen read, no anti-join; prunes at the scan).
+        A plain parquet read of the dirs staged now, not the per-snapshot
+        cache: the next frontier append drops that cache, possibly while
+        a launched batch is still scanning this read."""
+        return self.catalog.tables["frontier"].read().filter(
+            F.col("frontier_offset") > F.lit(watermark)
+        )
+
     def _select_batch(self, live: DataFrame, b: int) -> DataFrame:
         sel = live
         if self.cfg.batch_wall_budget_ms is not None:
@@ -778,6 +849,82 @@ class CrawlEngine:
             "is_doc",
             ok & F.coalesce(F.col("content_type"), F.lit("")).contains("text/html"),
         )
+
+    def _fetch_render(
+        self, batch: DataFrame, batch_id: int, attempted_base: int,
+        obs: Observation,
+    ) -> DataFrame:
+        """Fetch + render of one ranked batch as its ``ATTEMPTS`` rows, the
+        batch's single materialization of the fat payload (no row cache:
+        every consumer re-reads the written delta with parquet column
+        pruning — seen-ish consumers touch url/status, discover touches
+        links, documents() touches spans). Non-documents pass a null html
+        through the UDF (empty spans). Batch metrics ride along as ``obs``
+        — no separate agg job."""
+        cfg = self.cfg
+        fetched = self._fetch(batch)
+        # Render placement: fixture mode rides the (balanced) pages-scan
+        # partitions — no shuffle of the html payload. HTTP mode fetches
+        # partitioned BY HOST (exact pacing), which is render-skewed
+        # whenever one host dominates the batch, so there the payload is
+        # re-balanced by url hash before the CPU-heavy render. An
+        # explicit render_partitions forces the url-hash repartition in
+        # either mode.
+        if cfg.render_partitions:
+            fetched = fetched.repartition(cfg.render_partitions, "url")
+        elif cfg.fetch_mode == "http":
+            fetched = fetched.repartition(
+                self.spark.sparkContext.defaultParallelism, "url"
+            )
+        rendered = (
+            fetched.withColumn(
+                "r",
+                self._render_udf(
+                    F.col("url"),
+                    F.when(F.col("is_doc"), F.col("html")),
+                ),
+            )
+            .select(
+                "url",
+                F.xxhash64("url").alias("url_hash"),
+                "depth",
+                "parent_rank",
+                "frontier_offset",
+                "status",
+                "error",
+                "is_doc",
+                F.col("r.doc_id").alias("doc_id"),
+                F.col("r.spans").alias("spans"),
+                F.col("r.links").alias("links"),
+                # the two batch-varying literals live ONLY in this
+                # small post-UDF projection stage; _discover derives
+                # its batch scalars from attempted_in_batch instead
+                F.lit(batch_id).cast("long").alias("attempted_in_batch"),
+                (F.lit(attempted_base) + F.col("parent_rank"))
+                .cast("long")
+                .alias("crawl_rank"),
+            )
+            .observe(
+                obs,
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("ok"),
+                F.sum(F.when(F.col("status") == "failed", 1).otherwise(0)).alias(
+                    "failed"
+                ),
+                F.sum(
+                    F.when(
+                        (F.col("status") == "ok") & ~F.col("is_doc"), 1
+                    ).otherwise(0)
+                ).alias("skipped"),
+                F.min("frontier_offset").alias("lo"),
+                F.max("frontier_offset").alias("hi"),
+                F.coalesce(
+                    F.sum(F.when(F.col("is_doc"), F.size("links")).otherwise(0)),
+                    F.lit(0),
+                ).alias("n_disc"),
+            )
+        )
+        return rendered.select([f.name for f in schemas.ATTEMPTS.fields])
 
     # ------------------------------------------------------------------
     def _discover(
@@ -1036,6 +1183,9 @@ class CrawlEngine:
         # the one run-long cache (web-scale robots formulation); the
         # finally releases it whether the run returns or raises
         robots_join_dim = None
+        # the batch whose fetch+render write may still be running
+        launched = None
+        sc = self.spark.sparkContext
         try:
             # robots sizing and the seen-filter build are independent Spark
             # jobs — overlap them (setup fixed cost = max, not sum). ONE job
@@ -1129,148 +1279,132 @@ class CrawlEngine:
                         )
                 return run
 
-            while self.attempted < cfg.limit:
-                t_ph = t_batch = time.monotonic()
-                if max_batches is not None and batches_run >= max_batches:
-                    break
-                frontier_t = self.catalog.tables["frontier"]
-                attempts_t = self.catalog.tables["attempts"]
-                # the watermark prefix property needs pure FIFO: no politeness
-                # budget, no custom priority rule, and no seed-supplied
-                # priorities (seeds_df with a priority column selects by
-                # (priority, offset) — not an offset prefix)
-                fifo = (
-                    cfg.batch_wall_budget_ms is None
-                    and cfg.priority_col is None
-                    and not self._seed_priorities
-                )
-                if fifo and self.offset_watermark is not None:
-                    # FIFO mode: live frontier by watermark predicate (no seen
-                    # read, no anti-join; prunes at the scan)
-                    live = frontier_t.read(cached=True).filter(
-                        F.col("frontier_offset") > F.lit(self.offset_watermark)
-                    )
-                else:
-                    # column-pruned parquet scan (url only) of the attempts
-                    # table — never cached: the fat span/link columns would
-                    # ride along into the row cache. Both sides netted against
-                    # tombstones (no-ops unless invalidate() was called).
-                    seen_urls = self._net_seen_urls()
-                    live = self._net_frontier(frontier_t.read(cached=True)).join(
-                        seen_urls, "url", "left_anti"
-                    )
+            frontier_t = self.catalog.tables["frontier"]
+            attempts_t = self.catalog.tables["attempts"]
+            run_tag = uuid.uuid4().hex[:8]
 
-                remaining = cfg.limit - self.attempted
-                b = min(cfg.batch_size or remaining, remaining, MAX_BATCH_ROWS)
-                # live frontier size by bookkeeping, not an extra anti-join job:
-                # frontier rows are unique and seen ⊆ frontier, so
-                # |live| = |enqueued| - |attempted|. Tombstones break the
-                # identity (invalidated urls are live again, revoked ones are
-                # gone), so the rare invalidation path pays an exact count.
-                if self._has_tombstones:
-                    live_count = live.count()
-                else:
-                    live_count = self.enqueued_total - self.attempted
-                if live_count <= 0:
-                    # frontier exhausted: don't plan+run a whole empty batch
-                    # (fetch UDF spin-up, empty appends) just to learn n=0
-                    break
+            def launch(live, b, batch_id, attempted_base) -> _Launch:
+                """Plan batch ``batch_id``'s select → rank over ``live`` on
+                this thread and submit the rest to the pool as one Spark job
+                group: materialize the ranked batch, then fetch → render →
+                attempts write. The directory it writes is an orphan until
+                the loop stages it."""
                 # parent_rank = attempt order within the batch, numbered in
                 # the top-k merge task that selects it
                 batch = self._with_parent_rank(self._select_batch(live, b))
+                obs = Observation(f"batch-{batch_id}")
+                group = f"crawl-{run_tag}-b{batch_id}"
 
-                fetched = self._fetch(batch)
-                # Render placement: fixture mode rides the (balanced) pages-scan
-                # partitions — no shuffle of the html payload. HTTP mode fetches
-                # partitioned BY HOST (exact pacing), which is render-skewed
-                # whenever one host dominates the batch, so there the payload is
-                # re-balanced by url hash before the CPU-heavy render. An
-                # explicit render_partitions forces the url-hash repartition in
-                # either mode.
-                if cfg.render_partitions:
-                    fetched = fetched.repartition(cfg.render_partitions, "url")
-                elif cfg.fetch_mode == "http":
-                    fetched = fetched.repartition(
-                        self.spark.sparkContext.defaultParallelism, "url"
-                    )
+                def fetch_render() -> str:
+                    with _job_group(sc, group, f"crawl:b{batch_id}:fetch_render"):
+                        # select ONCE: the fetch's hit, matched and miss
+                        # sides all read this checkpoint of <= b rows
+                        # instead of each re-running the top-k over the
+                        # frontier. Natural partitioning for the write: a
+                        # repartition would shuffle the payload, a
+                        # coalesce would collapse the render parallelism.
+                        pinned = batch.localCheckpoint(eager=True)
+                        return attempts_t.write(
+                            self._fetch_render(
+                                pinned, batch_id, attempted_base, obs
+                            ),
+                            f"b{batch_id}",
+                        )
 
-                # ONE materialization for the whole batch: fetch + render fused,
-                # written STRAIGHT to the attempts delta (no row cache of the
-                # fat span/link payload — every consumer below re-reads the
-                # delta with parquet column pruning: seen-ish consumers touch
-                # url/status, discover touches links, documents() touches
-                # spans). Non-documents pass a null html through the UDF (empty
-                # spans). Batch metrics ride along as an Observation — no
-                # separate agg job.
-                obs = Observation(f"batch-{self.batch_id}")
-                rendered = (
-                    fetched.withColumn(
-                        "r",
-                        self._render_udf(
-                            F.col("url"),
-                            F.when(F.col("is_doc"), F.col("html")),
-                        ),
-                    )
-                    .select(
-                        "url",
-                        F.xxhash64("url").alias("url_hash"),
-                        "depth",
-                        "parent_rank",
-                        "frontier_offset",
-                        "status",
-                        "error",
-                        "is_doc",
-                        F.col("r.doc_id").alias("doc_id"),
-                        F.col("r.spans").alias("spans"),
-                        F.col("r.links").alias("links"),
-                        # the two batch-varying literals live ONLY in this
-                        # small post-UDF projection stage; _discover derives
-                        # its batch scalars from attempted_in_batch instead
-                        F.lit(self.batch_id).cast("long").alias("attempted_in_batch"),
-                        (F.lit(self.attempted) + F.col("parent_rank"))
-                        .cast("long")
-                        .alias("crawl_rank"),
-                    )
-                    .observe(
-                        obs,
-                        F.count(F.lit(1)).alias("n"),
-                        F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("ok"),
-                        F.sum(F.when(F.col("status") == "failed", 1).otherwise(0)).alias(
-                            "failed"
-                        ),
-                        F.sum(
-                            F.when(
-                                (F.col("status") == "ok") & ~F.col("is_doc"), 1
-                            ).otherwise(0)
-                        ).alias("skipped"),
-                        F.min("frontier_offset").alias("lo"),
-                        F.max("frontier_offset").alias("hi"),
-                        F.coalesce(
-                            F.sum(F.when(F.col("is_doc"), F.size("links")).otherwise(0)),
-                            F.lit(0),
-                        ).alias("n_disc"),
-                    )
+                return _Launch(
+                    pool.submit(_timed("fetch_render", fetch_render)), obs, group
                 )
 
-                t_ph = _mark("plan", t_ph)
-                # job 1: fetch+render straight into the attempts delta — the
-                # batch's single materialization of the fat payload; metrics
-                # fill in-flight, row count comes from the parquet footers
-                # (driver-side metadata, no extra job). Natural partitioning:
-                # a repartition would shuffle the payload, a coalesce would
-                # collapse the render parallelism.
-                attempts_t.append(
-                    rendered.select([f.name for f in schemas.ATTEMPTS.fields]),
-                    f"b{self.batch_id}",
-                )
+            # the watermark prefix property needs pure FIFO: no politeness
+            # budget, no custom priority rule, and no seed-supplied
+            # priorities (seeds_df with a priority column selects by
+            # (priority, offset) — not an offset prefix)
+            fifo = (
+                cfg.batch_wall_budget_ms is None
+                and cfg.priority_col is None
+                and not self._seed_priorities
+            )
+            prefetched = 0
+            t_commit = time.monotonic()
+            while True:
+                t_ph = time.monotonic()
+                if launched is None:
+                    if self.attempted >= cfg.limit or (
+                        max_batches is not None and batches_run >= max_batches
+                    ):
+                        break
+                    if fifo and self.offset_watermark is not None:
+                        live = self._fifo_live(self.offset_watermark)
+                    else:
+                        # column-pruned parquet scan (url only) of the
+                        # attempts table — never cached: the fat span/link
+                        # columns would ride along into the row cache. Both
+                        # sides netted against tombstones (no-ops unless
+                        # invalidate() was called).
+                        seen_urls = self._net_seen_urls()
+                        live = self._net_frontier(
+                            frontier_t.read(cached=True)
+                        ).join(seen_urls, "url", "left_anti")
+                    # live frontier size by bookkeeping, not an extra
+                    # anti-join job: frontier rows are unique and seen ⊆
+                    # frontier, so |live| = |enqueued| - |attempted|.
+                    # Tombstones break the identity (invalidated urls are
+                    # live again, revoked ones are gone), so the rare
+                    # invalidation path pays an exact count.
+                    if self._has_tombstones:
+                        live_count = live.count()
+                    else:
+                        live_count = self.enqueued_total - self.attempted
+                    if live_count <= 0:
+                        # frontier exhausted: don't plan+run a whole empty
+                        # batch (fetch UDF spin-up, empty writes) to learn n=0
+                        break
+                    launched = launch(
+                        live, self._batch_rows(self.attempted),
+                        self.batch_id, self.attempted,
+                    )
+                    t_ph = _mark("plan", t_ph)
+                else:
+                    # launched early, so FIFO watermark mode: no tombstones
+                    live_count = self.enqueued_total - self.attempted
+
+                # the fetch+render write: stage its delta (row count from
+                # the parquet footers, no extra job; metrics filled in
+                # flight)
+                attempts_t.stage(launched.future.result())
+                t_ph = _mark("fetch_wait", t_ph)
                 n_batch = attempts_t.last_dir_row_count()
-                t_ph = _mark("fetch_render", t_ph)
                 if n_batch == 0:
                     break
-                agg = obs.get
+                agg = launched.obs.get
                 delta = self.spark.read.schema(schemas.ATTEMPTS).parquet(
                     attempts_t.last_dir
                 )
+                # the watermark after this batch; None once a politeness or
+                # priority batch may have skipped ahead of unfetched offsets
+                # (the prefix property is gone for good)
+                next_w = (
+                    max(self.offset_watermark, agg["hi"] or 0)
+                    if fifo and self.offset_watermark is not None
+                    else None
+                )
+                # pipelining (module docstring): when the next batch is
+                # exactly the next b rows above this one, launch it now so
+                # its fetch+render overlaps this batch's admission and commit
+                b_next = self._batch_rows(self.attempted + n_batch)
+                if (
+                    next_w is not None
+                    and 0 < b_next <= live_count - n_batch
+                    and (max_batches is None or batches_run + 1 < max_batches)
+                ):
+                    launched = launch(
+                        self._fifo_live(next_w), b_next,
+                        self.batch_id + 1, self.attempted + n_batch,
+                    )
+                    prefetched += 1
+                    t_ph = _mark("plan", t_ph)
+                else:
+                    launched = None
 
                 n_cand, n_admit, n_tpl_dropped = self._admit(
                     delta, live_count - n_batch, robots_filter, robots_join_dim
@@ -1290,7 +1424,7 @@ class CrawlEngine:
                     int(n_disc),
                     n_admit,
                     n_cand - n_admit,
-                    int((time.monotonic() - t_batch) * 1000),
+                    int((time.monotonic() - t_commit) * 1000),
                 )
                 # lineage is ONE row: driver-side pyarrow append (no Spark job).
                 # The bloom fold-in of newly admitted urls is PIPELINED into the
@@ -1323,17 +1457,13 @@ class CrawlEngine:
 
                 t_ph = _mark("bloom_lineage", t_ph)
                 # --- atomic commit: the batch happened ---
-                if fifo and self.offset_watermark is not None:
-                    self.offset_watermark = max(self.offset_watermark, agg["hi"] or 0)
-                else:
-                    # a politeness-budget batch may skip ahead of unfetched
-                    # offsets: the prefix property is gone for good
-                    self.offset_watermark = None
+                self.offset_watermark = next_w
                 self.attempted += n_batch
                 self.enqueued_total += n_admit
                 self.batch_id += 1
                 batches_run += 1
                 self.catalog.commit(self._state())
+                t_commit = time.monotonic()
 
                 summary.batches += 1
                 summary.attempted += n_batch
@@ -1355,7 +1485,10 @@ class CrawlEngine:
                     # re-commit so the compacted snapshots are the pinned
                     # ones. The pipelined bloom fold-in reads the frontier
                     # delta lazily — resolve it BEFORE the delta dirs are
-                    # superseded (vacuum stays manual: time-travel preserved).
+                    # superseded (vacuum stays manual: time-travel preserved,
+                    # and a launched batch still reads the old frontier dirs;
+                    # its unstaged attempts delta lands on top of the
+                    # compacted files when the next iteration stages it).
                     self._resolve_bloom()
                     self.catalog.tables["attempts"].compact(
                         n_files=max(1, self.attempted // 500_000)
@@ -1364,14 +1497,22 @@ class CrawlEngine:
                         n_files=max(1, self.enqueued_total // 2_000_000)
                     )
                     self.catalog.commit(self._state())
-                    _mark("compact", t_ph)
+                    t_commit = _mark("compact", t_ph)
 
             t_fin = time.monotonic()
             self._resolve_bloom()
             pool.shutdown()
             phase["final"] = round(time.monotonic() - t_fin, 3)
+            summary.extra["prefetched_batches"] = prefetched
             summary.wall_ms = (time.monotonic() - t0) * 1000
             return summary
+        except BaseException:
+            if launched is not None:
+                # never leave run() while a launched write may still run:
+                # cancel its job group, then wait its task out
+                sc.cancelJobGroup(launched.group)
+                futures_wait([launched.future])
+            raise
         finally:
             # a setup/batch exception must not leak the pool or an
             # in-flight never-awaited future (idempotent after the success

@@ -176,7 +176,11 @@ PARTITION_LINEAGE = StructType(
 )
 
 # Per-batch / per-partition lineage + metrics (north_rule: resumable from
-# checkpoint with per-partition lineage + metrics).
+# checkpoint with per-partition lineage + metrics). wall_ms runs from the
+# run's previous commit (for its first batch: the end of set-up) to the
+# moment this batch's lineage row is built. A batch launched early starts
+# its fetch+render before that commit, inside the previous batch's wall,
+# so the walls of one run never overlap and sum to at most its wall.
 LINEAGE = StructType(
     [
         StructField("batch_id", LongType(), False),

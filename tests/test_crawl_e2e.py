@@ -6,7 +6,14 @@ The three correctness gates (BASELINE.md):
 on (kind, text, media_ref, order).
 """
 
+import glob
+import json
+import os
+import threading
+import time
+
 import pytest
+from pyspark.sql import functions as F
 
 from inform_spark.plans.crawl import CrawlConfig, CrawlEngine
 from inform_spark.reference_impl import crawl_sequential
@@ -453,3 +460,156 @@ def test_crawl_ip_politeness_config_validation(spark, site_dfs):
             spark, pages_df, robots_df,
             CrawlConfig(seeds=["https://site0.test/"], politeness_key="cidr"),
         )
+
+
+# ---------------------------------------------------------------------------
+# pipelining: batch k+1 launched before batch k admits
+# ---------------------------------------------------------------------------
+
+# a FIFO crawl whose live frontier outgrows the batch in some batches and
+# not in others (the seed batch, the drain at the end). site1 reaches 24
+# pages; limit=24 cuts the last batch to the 2 rows left after batch 7,
+# so the gate is met with equality (live - n == b) once.
+PIPE = dict(seeds=["https://site1.test/"], limit=24, batch_size=3)
+
+
+@pytest.fixture(scope="module")
+def fifo_run(spark, site_dfs, tmp_path_factory):
+    """One uninterrupted crawl of ``PIPE``."""
+    eng = CrawlEngine(
+        spark, *site_dfs, CrawlConfig(**PIPE),
+        checkpoint_dir=str(tmp_path_factory.mktemp("fifo_run")),
+    )
+    return eng, eng.run()
+
+
+def _early_batches(eng):
+    """The batches the gate must launch early, replayed from the lineage:
+    batch k+1 is launched before batch k admits iff ``live_k - n_k >=
+    b_{k+1} > 0`` (FIFO, no max_batches)."""
+    enqueued, attempted, early = len(PIPE["seeds"]), 0, []
+    for r in eng.lineage().orderBy("batch_id").collect():
+        live_left = enqueued - attempted - r["pages_attempted"]
+        attempted += r["pages_attempted"]
+        b_next = min(PIPE["batch_size"], PIPE["limit"] - attempted)
+        if 0 < b_next <= live_left:
+            early.append(r["batch_id"] + 1)
+        enqueued += r["links_admitted"]
+    return early
+
+
+def _outcome(eng):
+    rows = sorted(eng.seen().collect(), key=lambda r: r["crawl_rank"])
+    spans = {
+        r["url"]: [
+            (s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]
+        ]
+        for r in eng.documents().collect()
+    }
+    return {r["url"]: r["status"] for r in rows}, [r["url"] for r in rows], spans
+
+
+def test_prefetch_gate(spark, site, site_dfs, fifo_run, tmp_path):
+    """The next batch is launched early exactly when its selection is
+    already fixed, and the crawl stays equal to the sequential oracle;
+    politeness-budget and priority runs never launch early, and nothing
+    is launched past ``max_batches``."""
+    pages, robots = site
+    eng, summary = fifo_run
+    assert_engine_equals_oracle(
+        eng, crawl_sequential(pages, robots, PIPE["seeds"][0], limit=PIPE["limit"])
+    )
+    early = _early_batches(eng)
+    late = set(range(1, summary.batches)) - set(early)
+    assert len(early) >= 2 and late, (early, summary.batches)
+    assert summary.extra["prefetched_batches"] == len(early)
+
+    # capped where the gate would launch the next batch early
+    n = early[1]
+    ck = tmp_path / "capped"
+    capped = CrawlEngine(
+        spark, *site_dfs, CrawlConfig(**PIPE), checkpoint_dir=str(ck)
+    ).run(max_batches=n)
+    assert capped.batches == n
+    assert capped.extra["prefetched_batches"] == 1
+    assert glob.glob(str(ck / "attempts" / "data" / f"b{n - 1}-*"))
+    assert not glob.glob(str(ck / "attempts" / "data" / f"b{n}-*"))
+
+    for name, extra in (
+        ("budget", {"batch_wall_budget_ms": 4000}),
+        ("priority", {"priority_col": lambda: F.length("path")}),
+    ):
+        _, s = run_engine(
+            spark, site_dfs, tmp_path / name,
+            seeds=PIPE["seeds"], limit=9, batch_size=3, **extra,
+        )
+        assert s.batches >= 3 and s.extra["prefetched_batches"] == 0, name
+
+
+def test_crash_after_early_launch_resumes(spark, site_dfs, fifo_run, tmp_path, monkeypatch):
+    """``_admit`` raises at batch j while a Spark job of batch j+1's early
+    launch is running (planted after its attempts write, so the directory
+    is complete): ``run`` cancels that job instead of waiting it out and
+    raises with no job left running. The directory is an orphan no
+    manifest names, a fresh engine resumes to the uninterrupted run's
+    seen set, order and spans, and ``vacuum`` removes the orphan."""
+    from inform_spark.plans.checkpoint import SnapshotTable
+
+    straight, _ = fifo_run
+    j = _early_batches(straight)[0] - 1
+    ck = tmp_path / "crashed"
+    sc = spark.sparkContext
+    write, admit = SnapshotTable.write, CrawlEngine._admit
+
+    written = threading.Event()
+
+    def sleep_rows(batches):
+        # nested, so it is pickled by value: python workers cannot import
+        # this test module
+        time.sleep(60)
+        yield from batches
+
+    def write_then_hang(self, df, label, *a, **kw):
+        out = write(self, df, label, *a, **kw)
+        if self.name == "attempts" and label == f"b{j + 1}":
+            written.set()
+            spark.range(1).mapInPandas(sleep_rows, "id long").collect()
+        return out
+
+    def crashing_admit(self, *a, **kw):
+        if self.batch_id == j:
+            assert written.wait(60), "batch j+1 was not launched"
+            # the write's own job has ended: wait for the hanging one
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            deadline = time.monotonic() + 30
+            while not sc.statusTracker().getActiveJobsIds():
+                assert time.monotonic() < deadline, "no job of batch j+1 ran"
+                time.sleep(0.01)
+            raise RuntimeError("planted admit failure")
+        return admit(self, *a, **kw)
+
+    monkeypatch.setattr(SnapshotTable, "write", write_then_hang)
+    monkeypatch.setattr(CrawlEngine, "_admit", crashing_admit)
+    t = time.monotonic()
+    with pytest.raises(RuntimeError, match="planted"):
+        CrawlEngine(
+            spark, *site_dfs, CrawlConfig(**PIPE), checkpoint_dir=str(ck)
+        ).run()
+    assert time.monotonic() - t < 45  # cancelled, not waited out
+    # job events reach the status store asynchronously: deliver the ones
+    # already posted; a job still running stays active
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getActiveJobsIds()) == []
+    (orphan,) = glob.glob(str(ck / "attempts" / "data" / f"b{j + 1}-*"))
+    for m in glob.glob(str(ck / "attempts" / "_snapshots" / "v*.json")):
+        with open(m) as f:
+            assert orphan not in json.load(f)["dirs"]
+    monkeypatch.undo()
+
+    resumed = CrawlEngine(
+        spark, *site_dfs, CrawlConfig(**PIPE), checkpoint_dir=str(ck)
+    )
+    resumed.run(resume=True)
+    assert resumed.catalog.vacuum()["attempts"] >= 1
+    assert not os.path.exists(orphan)
+    assert _outcome(resumed) == _outcome(straight)
